@@ -43,14 +43,15 @@ _IVF_ITERS = 1     # Lloyd refinements over the training sample
 # files in full, so nothing is precomputed or replayed across runs —
 # this is the session-level analog of Spark's own FileIndex caching
 # (the engine catalog applies the same policy to its own tables).
-# Keyed per SparkContext so a fresh session never reuses stale JVM
-# handles.
-_T_CACHE: dict[tuple[int, str], DataFrame] = {}
+# Keyed per Spark application id so a fresh session never reuses stale
+# JVM handles (an ``id()`` of a stopped context can be reused by the
+# next context object; an application id never is).
+_T_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (id(spark.sparkContext), path)
+    key = (spark.sparkContext.applicationId, path)
     df = _T_CACHE.get(key)
     if df is None:
         df = spark.read.parquet(path)

@@ -245,9 +245,12 @@ def frontier_pop_probe(spark: SparkSession,
 
     ``old`` = the round-3 shape: ``candidate_prefix`` over a full scan
     of an unclustered on-disk frontier (measured growth 4.08x/10x in
-    BENCH_r03). ``new`` = what the engine now runs after a compaction:
-    the snapshot is depth/counter-range-partitioned + sorted, a
-    per-(site, depth) histogram picks the ``depth > g OR (depth = g AND
+    BENCH_r03, when the prefix was a two-pass pandas top-K; it is now
+    Spark's native per-site ``WindowGroupLimit``, which still reads and
+    sorts every row of that scan once, per partition). ``new`` = what
+    the engine now runs after a compaction: the snapshot is
+    depth/counter-range-partitioned + sorted, a per-(site, depth)
+    histogram picks the ``depth > g OR (depth = g AND
     counter <= c)`` cutoff (``pop_cutoff``), and the pushed predicate
     file-skips everything outside the needed band — so the scan tracks
     sites x prefix_k, not the frontier size. The cutoff computation is

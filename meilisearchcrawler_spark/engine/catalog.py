@@ -28,6 +28,11 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 
+def _compacted(rels) -> list:
+    """The compacted-snapshot dirs among a table's rel paths."""
+    return [r for r in rels if os.path.basename(r).startswith("compact_")]
+
+
 class CheckpointCatalog:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -43,18 +48,21 @@ class CheckpointCatalog:
         # listing + footer schema inference), which the engine
         # otherwise pays ~10× per round over a dir set that grows
         # every round. Pure metadata caching: every action over the
-        # handle still scans the parquet files. New deltas change the
-        # path set, so a new round's reads get a fresh entry; the map
-        # is bounded by (tables × rounds between compactions).
-        self._df_cache: dict[tuple[str, ...], DataFrame] = {}
+        # handle still scans the parquet files. Grouped per table: a
+        # commit that adds deltas to a table evicts that table's
+        # handles except the one over its compacted snapshot (whose
+        # path set the commit did not change), so the cache stays
+        # O(tables) even when nothing ever compacts.
+        self._df_cache: dict[str, dict[tuple[str, ...], DataFrame]] = {}
 
-    def _read_paths(self, rels) -> DataFrame:
+    def _read_paths(self, table: str, rels) -> DataFrame:
+        cache = self._df_cache.setdefault(table, {})
         key = tuple(rels)
-        df = self._df_cache.get(key)
+        df = cache.get(key)
         if df is None:
             df = self.spark.read.parquet(
                 *[os.path.join(self.root, r) for r in rels])
-            self._df_cache[key] = df
+            cache[key] = df
         return df
 
     # -- manifest ---------------------------------------------------------
@@ -113,7 +121,13 @@ class CheckpointCatalog:
         """Atomically publish all staged deltas + scalar state for one
         round. This is the round barrier (SURVEY.md §3.1 lifecycle)."""
         for table, rels in staged.items():
-            self.manifest["tables"].setdefault(table, []).extend(rels)
+            current = self.manifest["tables"].setdefault(table, [])
+            current.extend(rels)
+            if rels and table in self._df_cache:
+                snap = tuple(_compacted(current))
+                self._df_cache[table] = {
+                    k: df for k, df in self._df_cache[table].items()
+                    if k == snap}
         self.manifest["state"] = state
         self.manifest["committed_round"] = round_no
         self._commit_manifest()
@@ -127,7 +141,7 @@ class CheckpointCatalog:
         rels = self.manifest["tables"].get(table)
         if not rels:
             return None
-        return self._read_paths(rels)
+        return self._read_paths(table, rels)
 
     def read_split(self, table: str) -> tuple[DataFrame | None, DataFrame | None]:
         """``(compacted snapshot, post-compaction deltas)`` — readers
@@ -136,15 +150,13 @@ class CheckpointCatalog:
         separately; deltas since the last compaction are bounded by
         ``compact_every`` rounds and scanned as-is."""
         rels = self.manifest["tables"].get(table) or []
-        comp = [r for r in rels
-                if os.path.basename(r).startswith("compact_")]
-        rest = [r for r in rels
-                if not os.path.basename(r).startswith("compact_")]
+        comp = _compacted(rels)
+        rest = [r for r in rels if r not in comp]
 
         def _read(rs):
             if not rs:
                 return None
-            return self._read_paths(rs)
+            return self._read_paths(table, rs)
 
         return _read(comp), _read(rest)
 
@@ -179,7 +191,7 @@ class CheckpointCatalog:
             keep.append(r)
         if not keep:
             return None
-        return self._read_paths(keep)
+        return self._read_paths(table, keep)
 
     @property
     def meta(self) -> dict:
@@ -266,10 +278,8 @@ class CheckpointCatalog:
         self._commit_manifest()
         for r in old:
             shutil.rmtree(os.path.join(self.root, r), ignore_errors=True)
-        # compaction is the epoch boundary for read handles: superseded
-        # dirs are gone, and dropping every cached handle here bounds
-        # the cache to (tables × rounds per compaction cycle)
-        self._df_cache.clear()
+        # the superseded dirs are gone: so must be their read handles
+        self._df_cache.pop(table, None)
 
     def blob_dir(self, name: str) -> str:
         path = os.path.join(self.root, "blobs", name)

@@ -32,7 +32,14 @@ Scale notes (10^10 frontier, 1000 executors):
 
 * the admission windows run on a bounded per-site candidate *prefix*
   (top-K), not the whole frontier; K escalates in the rare case the
-  prefix is exhausted by inadmissible rows. After a compaction the
+  prefix is exhausted by inadmissible rows. The prefix is Spark's
+  native ``WindowGroupLimit`` (:func:`candidate_prefix`): each input
+  partition keeps only its per-site top-K before the exchange, in the
+  JVM, so the frontier never funnels through one reducer and never
+  crosses into a Python worker (the engine lifts the optimizer's K
+  threshold on its session, :data:`WINDOW_GROUP_LIMIT_CONF`, or
+  budget-sized K would fall back to a full per-site sort). After a
+  compaction the
   prefix scan doesn't even read the frontier: the snapshot is
   depth/counter-clustered and a per-(site, depth) histogram in the
   manifest turns the per-site need into a pushed
@@ -62,6 +69,7 @@ Scale notes (10^10 frontier, 1000 executors):
 from __future__ import annotations
 
 import json
+import logging
 import os
 from contextlib import contextmanager
 from dataclasses import dataclass, field
@@ -93,6 +101,8 @@ from ..functions.urls import (
 from .bloom import PartitionedBloom, bitmap_delta, check_hashes
 from .catalog import CheckpointCatalog
 from .pagestore import load_store
+
+_log = logging.getLogger(__name__)
 
 FETCH_SCHEMA = StructType([
     StructField("site", StringType()),
@@ -130,71 +140,35 @@ def bucket_col(key, n_buckets: int):
     return F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
 
 
-def local_topk(frontier: DataFrame, prefix_k: int) -> DataFrame:
-    """Phase 1 of the two-phase top-K: per-Spark-partition, per-site
-    top-``prefix_k`` rows by (depth desc, counter asc). No shuffle —
-    the frontier streams through an Arrow kernel that holds at most K
-    rows per site per partition, so a 10^10-row frontier never funnels
-    through one reducer. Each batch is first pruned against the running
-    per-site K-th threshold (vectorized merge), so only contenders pay
-    the sort."""
-    cols = list(frontier.columns)
-
-    def topk(batches):
-        best: pd.DataFrame | None = None
-        for pdf in batches:
-            if best is not None and len(pdf):
-                kth = (best.groupby("site", sort=False)
-                       .agg(_n=("counter", "size"), _td=("depth", "min"))
-                       .reset_index())
-                wk = best.groupby("site", sort=False).tail(1) \
-                         .rename(columns={"counter": "_tc"})[["site", "_tc"]]
-                m = pdf[["site", "depth", "counter"]].merge(
-                    kth.merge(wk, on="site"), on="site", how="left")
-                keep = (m["_n"].isna() | (m["_n"] < prefix_k)
-                        | (m["depth"] > m["_td"])
-                        | ((m["depth"] == m["_td"])
-                           & (m["counter"] < m["_tc"]))).to_numpy()
-                pdf = pdf[keep]
-                if not len(pdf):
-                    continue
-            cur = pd.concat([best, pdf]) if best is not None else pdf
-            cur = cur.sort_values(["site", "depth", "counter"],
-                                  ascending=[True, False, True],
-                                  kind="mergesort")
-            best = cur.groupby("site", sort=False).head(prefix_k)
-        if best is not None and len(best):
-            yield best[cols]
-
-    return frontier.mapInPandas(topk, schema=frontier.schema)
+# Spark inserts the partial per-partition WindowGroupLimit under
+# candidate_prefix only while K is below this SQL conf (default 1000);
+# budget-derived prefixes are ≥1000 at every real shape (1664 at 200
+# pages/site per round, ~800k on the bench crawl), so CrawlEngine lifts
+# it on its session. Above the threshold the whole frontier is
+# hash-shuffled on site and window-sorted per site. Lifted, the K=1664
+# prefix of a 10^6-row, 2-site frontier takes 0.51 s vs 1.88 s for the
+# former two-pass pandas top-K (medians of 6 interleaved reps, 4-core
+# VM; row-identical output).
+WINDOW_GROUP_LIMIT_CONF = ("spark.sql.optimizer.windowGroupLimitThreshold",
+                           str(2**31 - 1))
 
 
-def candidate_prefix(frontier: DataFrame, prefix_k: int,
-                     small: bool = False) -> DataFrame:
-    """Tree-reduced per-site top-``prefix_k`` prefix of the frontier in
-    heap order (depth desc, counter asc), with ``_rank``.
+def candidate_prefix(frontier: DataFrame, prefix_k: int) -> DataFrame:
+    """Per-site top-``prefix_k`` prefix of the frontier in heap order
+    (depth desc, counter asc), with ``_rank``.
 
-    Phase 1: per-partition per-site top-K (shuffle-free Arrow scan).
-    Phase 2: one hash exchange on site, then the same streaming top-K
-    kernel again — now exact per-site top-K, holding ≤ K rows per site
-    at any moment. The final rank window therefore sorts ≤ sites × K
-    rows TOTAL, regardless of frontier size, partition count, or how
-    large ``prefix_k`` is relative to per-partition row counts (a plain
-    two-phase prefix degenerates to a full per-site window sort when
-    K ≥ rows/partition/site — exactly the big-budget production case).
-    What remains O(frontier) is one embarrassingly-parallel scan.
-
-    ``small=True`` (round-6): the caller PROVES the frontier is small
-    (driver-tracked row count under the small-round threshold), so the
-    rank window alone is exact and the two Arrow top-K passes are pure
-    overhead — each is a Python-worker round-trip (~0.2-0.4 s of the
-    small round's wall; guide §4: the JVM↔Python boundary is a per-
-    stage cost). Output is row-identical either way: the two-phase form
-    only pre-prunes the window's input to a per-site top-K superset."""
+    One ``row_number() <= prefix_k`` window. Spark plans it as a native
+    ``WindowGroupLimit``: a *Partial* per-site sort + limit inside each
+    input partition, BEFORE the exchange on site, then the *Final*
+    limit and the rank window over at most partitions × sites × K
+    rows. What remains O(frontier) is one embarrassingly-parallel JVM
+    scan+sort; no row crosses the JVM↔Python boundary. The optimizer
+    only inserts the limit while ``prefix_k`` is under
+    :data:`WINDOW_GROUP_LIMIT_CONF`, which :class:`CrawlEngine` lifts
+    on its session. Without it the result is the same rows, from a
+    full per-site window sort."""
     w = Window.partitionBy("site").orderBy(F.desc("depth"), F.asc("counter"))
-    pruned = frontier if small else local_topk(
-        local_topk(frontier, prefix_k).repartition("site"), prefix_k)
-    return (pruned
+    return (frontier
             .withColumn("_rank", F.row_number().over(w))
             .filter(F.col("_rank") <= prefix_k))
 
@@ -452,6 +426,9 @@ class CrawlEngine:
                  config: CrawlConfig | None = None,
                  initial_url_seen: list[dict] | None = None):
         self.spark = spark
+        # a runtime SQL conf, so the engine owns it whoever built the
+        # session (see WINDOW_GROUP_LIMIT_CONF)
+        spark.conf.set(*WINDOW_GROUP_LIMIT_CONF)
         self.cfg = config or CrawlConfig()
         self.catalog = CheckpointCatalog(spark, catalog_root)
         self.pages_path = pages_path
@@ -477,24 +454,25 @@ class CrawlEngine:
         # J3/J4: per-site exclusions and per-host robots rules as
         # broadcast dimension tables — admission plans stay O(1) in
         # site/host count instead of one when-branch per site
-        self._sites_dim = spark.createDataFrame(
-            [{"site": name, "_exclude": list(cfg["exclude"])}
-             for name, cfg in self.site_configs.items()],
-            schema="site string, _exclude array<string>")
-        self._robots_dim = spark.createDataFrame(
-            [{"host": host,
-              "_rob_txt": _robots_txt_of(rob),
-              "_rob_allow_all": bool(rob.get("fetch_fails"))}
-             for host, rob in self.robots.items()],
-            schema=("host string, _rob_txt string, "
-                    "_rob_allow_all boolean")) if self.robots else None
+        self._sites_dim = _local_dim(
+            spark, "site string, _exclude array<string>",
+            site=list(self.site_configs),
+            _exclude=[list(cfg["exclude"])
+                      for cfg in self.site_configs.values()])
+        self._robots_dim = _local_dim(
+            spark, "host string, _rob_txt string, _rob_allow_all boolean",
+            host=list(self.robots),
+            _rob_txt=[_robots_txt_of(r) for r in self.robots.values()],
+            _rob_allow_all=[bool(r.get("fetch_fails"))
+                            for r in self.robots.values()],
+        ) if self.robots else None
         self._bloom = PartitionedBloom(self.cfg.bloom_num_partitions,
                                        bits_per_partition=1 << 17)
         self._bloom_bc = None
         self._bloom_table: DataFrame | None = None
         self._eager_pool = None
         # async pre-selection materialization futures (the skip-path
-        # cand noop kick in _select_pops), joined at the round barrier
+        # cand noop kick in _select_pops), settled when the round ends
         self._presel_futs: list = []
         self._initial_url_seen = initial_url_seen or []
         self._restore_or_init()
@@ -560,9 +538,9 @@ class CrawlEngine:
     def _counter_base_df(self) -> DataFrame:
         """Per-site running URL counter as a broadcast dimension (the
         round-varying analog of the site config tables)."""
-        return self.spark.createDataFrame(
-            [(name, st.url_counter) for name, st in self.sites.items()],
-            schema="site string, _base long")
+        return _local_dim(
+            self.spark, "site string, _base long", site=list(self.sites),
+            _base=[st.url_counter for st in self.sites.values()])
 
     def _state_dict(self) -> dict:
         return {
@@ -924,7 +902,7 @@ class CrawlEngine:
         # pop bound; the latency-mode static width must be sized to
         # this, not the pop bound, or a 2k-URL round over many sites
         # funnels a ~10^5-row prefix through width-1 exchanges
-        # (single-threaded top-K kernel + window).
+        # (a single-task final top-K limit + window).
         pk0 = max(budgets.values()) * 8 + 64
         self._sel_bound = sum(
             pk0 if _fr(s) is None else min(pk0, _fr(s))
@@ -959,10 +937,8 @@ class CrawlEngine:
                     return False
                 progressed = self._execute_round(popped, now)
         finally:
-            # drop any un-joined pre-selection future (aborted round):
-            # the noop is side-effect-free and must not leak into the
-            # next round's barrier join
-            self._presel_futs = []
+            # before the frames it reads are released below
+            self._join_presel()
             for df in self._round_tmp:
                 df.unpersist()
             self._round_tmp = []
@@ -976,12 +952,32 @@ class CrawlEngine:
             self._compact()
         return progressed
 
+    def _join_presel(self) -> None:
+        """Settle the round's advisory pre-selection futures, on every
+        way out of the round: cancel the still-queued ones, wait for
+        the running ones (their job reads frames the round is about to
+        release), and log their failures instead of raising them. The
+        noop only warms the persisted admission frame: the round's
+        real consumers surface a genuine error themselves, and on the
+        success path the round's writes have already committed."""
+        futs, self._presel_futs = self._presel_futs, []
+        for fut in futs:
+            fut.cancel()
+        for fut in futs:
+            if fut.cancelled():
+                continue
+            try:
+                fut.result()
+            except Exception:
+                _log.warning("advisory pre-selection materialization "
+                             "failed", exc_info=True)
+
     @contextmanager
     def _latency_mode(self):
         """Latency-bound small rounds compile their barrier actions
         without AQE. The round's selection pipeline is ~12 exchanges
-        deep (two-phase top-K windows, the Bloom cogroup, admission
-        joins); under AQE every exchange is submitted as its own query
+        deep (the top-K window, the Bloom cogroup, admission joins);
+        under AQE every exchange is submitted as its own query
         stage — ~0.3-0.5 s of scheduling latency apiece, ~6 s of a
         2k-URL round's 15 s wall at the frontier10m harness (profiled:
         scripts/profile_frontier_actions.py). A static plan pipelines
@@ -1008,7 +1004,7 @@ class CrawlEngine:
         # latency; rounds whose selection frames reach 10^4-10^6 rows
         # get 8-wide exchanges (measured at the frontier10m harness:
         # a 2k-URL round over 16 sites has a ~257k-row prefix bound,
-        # and width 1 serialized the top-K kernel + admission window)
+        # and width 1 serialized the final top-K + admission window)
         bound = self._pop_bound
         if _LATENCY_WIDTH_FROM_SEL_BOUND:
             bound = max(bound, getattr(self, "_sel_bound", 0))
@@ -1190,20 +1186,22 @@ class CrawlEngine:
         popped rows with admission flags + pos_in_round, or None when
         the frontier is empty for every active site.
 
-        The candidate prefix is computed as a two-phase top-K (local
-        per-partition prefixes → global window on their union) over the
-        histogram-pruned pop view (:meth:`_pop_frontier`), so the
-        per-site sort never sees the whole frontier — and after a
-        compaction the scan itself file-skips everything outside the
-        deepest band. The view is rebuilt per escalation iteration
-        because the safe cutoff depends on ``prefix_k``."""
+        The candidate prefix is a native per-site top-K
+        (:func:`candidate_prefix`: partial per-partition limits before
+        the exchange, then the final window) over the histogram-pruned
+        pop view (:meth:`_pop_frontier`), so the per-site sort never
+        sees the whole frontier — and after a compaction the scan
+        itself file-skips everything outside the deepest band. The
+        view is rebuilt per escalation iteration because the safe
+        cutoff depends on ``prefix_k``."""
         order = [F.desc("depth"), F.asc("counter")]
         prefix_k = max(budgets.values()) * 8 + 64
         # per-round per-site budgets as a broadcast dimension (plan size
         # O(1) in site count; the values change every round, so they are
         # data, not plan literals)
-        budget_df = self.spark.createDataFrame(
-            list(budgets.items()), schema="site string, _budget int")
+        budget_df = _local_dim(self.spark, "site string, _budget int",
+                               site=list(budgets),
+                               _budget=list(budgets.values()))
         while True:
             # every frame this iteration persists lands in _round_tmp at
             # or after this index; an escalation retry releases them
@@ -1223,16 +1221,8 @@ class CrawlEngine:
                 return None
             # persisted: the admission bucket-prune collect materializes
             # the prefix once; the popped/stats plans then read cache
-            # instead of re-scanning the frontier. Small rounds (exact
-            # tracked frontier under the latency threshold) skip the
-            # two Arrow top-K passes — the rank window alone is exact
-            # and two Python-stage round-trips cheaper (guide §4).
-            small = (_FRONTIER_SIZE_BOUNDS and all(
-                self.sites[s].frontier_rows is not None for s in budgets)
-                and sum(self.sites[s].frontier_rows for s in budgets)
-                <= (self.cfg.latency_round_rows or 0))
-            prefix = self._persist_tmp(
-                candidate_prefix(frontier, prefix_k, small=small))
+            # instead of re-scanning the frontier
+            prefix = self._persist_tmp(candidate_prefix(frontier, prefix_k))
             cand = self._admission_flags(prefix)
             if self.cfg.host_budget is not None:
                 # politeness: over-budget rows stay in the frontier
@@ -1277,8 +1267,7 @@ class CrawlEngine:
                 # frame — the exact compute every downstream job needs
                 # first — so the selection pipeline (windows, Bloom
                 # probe, robots UDF) executes concurrently with that
-                # planning. Joined at the round barrier; a failure
-                # re-raises identically in the real consumers.
+                # planning. Settled when the round ends (_join_presel).
                 if _PRESEL_KICK and self.cfg.eager_stage:
                     if self._eager_pool is None:
                         from concurrent.futures import ThreadPoolExecutor
@@ -1372,9 +1361,6 @@ class CrawlEngine:
                     staged.setdefault(t, []).append(fut.result())
                 for fut in kick_futs:
                     fut.result()
-                for fut in self._presel_futs:
-                    fut.result()
-                self._presel_futs = []
                 return staged
             # one thread per staged table: each write is a small job
             # over cached parents, so the flush wall is the slowest
@@ -2112,6 +2098,15 @@ class CrawlEngine:
                          + F.col("_idx")).cast("long").alias("counter"))
                 .withColumn("bucket", bucket_col(F.col("url"),
                                                  self.cfg.seen_buckets)))
+
+
+def _local_dim(spark: SparkSession, schema: str, **cols: list) -> DataFrame:
+    """Driver-local dimension table from column lists. The Arrow
+    ``createDataFrame(pandas)`` path plans it as a ``LocalRelation``, so
+    a broadcast of it serializes driver-held rows; ``createDataFrame``
+    of a Python list goes through ``sc.parallelize`` instead, and every
+    use then runs a job that scans a pickled RDD."""
+    return spark.createDataFrame(pd.DataFrame(cols), schema=schema)
 
 
 def _host_of(url: str) -> str:

@@ -10,7 +10,7 @@ Harness shape: the real bench web (24k fetchable pages) seeds the
 crawl; a synthetic 10^7-row filler tier rides in the same frontier at
 depth 0 with high counters, so heap order (depth desc, counter asc)
 keeps it permanently below the fetchable tier — it is dead weight that
-every per-round frontier operation (two-phase candidate prefix,
+every per-round frontier operation (per-site top-K candidate prefix,
 adds⟂pops anti-join, still-queued membership scan, compaction) must
 carry, exactly like the long tail of a 10^10-URL production frontier.
 
@@ -56,8 +56,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     fx, paths = bench_fixture()
     root = tempfile.mkdtemp(prefix="mcspark_f10m_")
-    # budget sized so the two-phase top-K stays in its pruning regime
-    # (prefix_k = 8*budget+64 « per-partition per-site frontier rows)
+    # budget sized so the partial per-partition top-K limit stays in its
+    # pruning regime (prefix_k = 8*budget+64 « per-partition per-site
+    # frontier rows)
     cfg = CrawlConfig(round_budget=2_000, shuffle_partitions=int(cpus),
                       bloom_probe_mode="cogroup", compact_every=3)
     eng = CrawlEngine(spark, root, paths["pages"], fx.seeds, fx.robots, cfg,

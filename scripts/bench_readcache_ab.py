@@ -30,7 +30,7 @@ REPS = int(sys.argv[1]) if len(sys.argv) > 1 else 5
 _cached = CheckpointCatalog._read_paths
 
 
-def _uncached(self, rels):
+def _uncached(self, table, rels):
     return self.spark.read.parquet(
         *[os.path.join(self.root, r) for r in rels])
 

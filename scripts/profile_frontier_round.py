@@ -7,7 +7,7 @@ Same shape as scripts/bench_frontier10m.py (10^7-row filler tier,
 2k-URL rounds, cogroup Bloom, compact_every=3) but with the engine's
 driver-blocking phases individually timed via monkeypatch:
 
-  select_pops   two-phase candidate prefix + admission + stats collect
+  select_pops   top-K candidate prefix + admission + stats collect
   cuts          the three lazy localCheckpoint lineage cuts
   flush_commit  staged parquet writes (thread pool) + manifest commit
   compact       periodic snapshot/histogram/index rewrite (amortized)

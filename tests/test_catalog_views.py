@@ -157,3 +157,48 @@ class TestPreparedCompaction:
         assert [r["count"] for r in cat.read("crawl_log").collect()] == [2]
         for old in old_rels:
             assert not os.path.exists(os.path.join(cat.root, old))
+
+
+class TestReadHandleCache:
+    def test_cache_bounded_by_tables_without_compaction(self, spark,
+                                                        tmp_path):
+        """With ``compact_every`` unset nothing clears the read-handle
+        cache at compaction: each commit must evict the handles of the
+        tables whose path set it changed, or the cache gains one
+        JVM-pinned handle per table per round."""
+        cat = CheckpointCatalog(spark, str(tmp_path / "cat"))
+        schema = pa.schema([("site", pa.string()), ("round", pa.int32())])
+        tables = ("crawl_log", "url_seen_log")
+        for r in range(12):
+            staged = {t: [cat.stage_rows(t, [{"site": "s", "round": r}],
+                                         schema, r)]
+                      for t in tables}
+            cat.commit_round(r, staged, {})
+            handles = [cat.read(t) for t in tables]
+            assert sum(len(c) for c in cat._df_cache.values()) <= len(tables)
+            # a commit that leaves a table's path set alone keeps its
+            # handle
+            cat.commit_round(r, {"crawl_log": []}, {})
+            assert cat.read("crawl_log") is handles[0]
+        assert handles[0].count() == 12
+
+    def test_commit_keeps_compacted_snapshot_handle(self, spark, tmp_path):
+        """A commit that adds deltas to a compacted table keeps the
+        snapshot's handle (its path set is unchanged) and evicts the
+        rest."""
+        cat = CheckpointCatalog(spark, str(tmp_path / "cat"))
+        schema = pa.schema([("site", pa.string()), ("round", pa.int32())])
+        cat.commit_round(0, {"crawl_log": [cat.stage_rows(
+            "crawl_log", [{"site": "s", "round": 0}], schema, 0)]}, {})
+        cat.compact("crawl_log", cat.read("crawl_log"))
+        for r in range(1, 4):
+            cat.commit_round(r, {"crawl_log": [cat.stage_rows(
+                "crawl_log", [{"site": "s", "round": r}], schema, r)]}, {})
+            snap, _ = cat.read_split("crawl_log")
+            full = cat.read("crawl_log")
+            assert len(cat._df_cache["crawl_log"]) == 3
+        cat.commit_round(4, {"crawl_log": [cat.stage_rows(
+            "crawl_log", [{"site": "s", "round": 4}], schema, 4)]}, {})
+        assert list(cat._df_cache["crawl_log"].values()) == [snap]
+        assert cat.read_split("crawl_log")[0] is snap
+        assert full.count() == 4 and cat.read("crawl_log").count() == 5

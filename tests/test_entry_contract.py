@@ -94,3 +94,26 @@ def test_query_matches_oracle(spark, duck, sf_dir, name):
     dm = _multiset(duck_rows, [d[0].lower() for d in res.description])
     mismatches = [(a, b) for a, b in zip(sm, dm) if a != b]
     assert not mismatches, f"{name}: first value mismatches: {mismatches[:3]}"
+
+
+def test_reader_cache_keyed_on_application_id(monkeypatch):
+    """A context object's ``id()`` can be reused after it stops; the
+    reader-handle cache must key on the application id so a new
+    application never gets a dead context's handles."""
+    from types import SimpleNamespace
+
+    monkeypatch.setattr(entrymod, "_T_CACHE", {})
+    reads: list[str] = []
+
+    def parquet(path):
+        reads.append(path)
+        return object()
+
+    sc = SimpleNamespace(applicationId="app-1")
+    fake = SimpleNamespace(sparkContext=sc,
+                           read=SimpleNamespace(parquet=parquet))
+    first = entrymod._t(fake, "/d", "documents")
+    assert entrymod._t(fake, "/d", "documents") is first
+    sc.applicationId = "app-2"  # same context object, same id()
+    assert entrymod._t(fake, "/d", "documents") is not first
+    assert len(reads) == 2

@@ -1,21 +1,22 @@
 """Round-6 optimization internals: driver-tracked frontier sizes, the
-small-round candidate-prefix shortcut, and the adaptive Bloom-probe
-skip. All three only change PLAN shape / driver bookkeeping — these
-tests pin (a) the tracked size against the actual live frontier every
-round, (b) row-identity of the shortcut prefix, and (c) that a legacy
-checkpoint (state without ``frontier_rows``) still resumes and
-completes identically."""
+escalation-stats skip, and the native per-site candidate prefix. They
+only change PLAN shape / driver bookkeeping — these tests pin (a) the
+tracked size against the actual live frontier every round, (b) that a
+legacy checkpoint (state without ``frontier_rows``) still resumes and
+completes identically, and (c) the candidate prefix against a
+pure-Python heap-order reference, plus its partial-limit plan shape."""
 
 from __future__ import annotations
 
 import json
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
 from meilisearchcrawler_spark.config import CrawlConfig
 from meilisearchcrawler_spark.engine.crawler import (
-    CrawlEngine, candidate_prefix)
+    WINDOW_GROUP_LIMIT_CONF, CrawlEngine, candidate_prefix)
 from meilisearchcrawler_spark.fixtures.webgen import generate_web, write_parquet
 
 from meilisearchcrawler_spark.session import ship_package
@@ -132,18 +133,87 @@ def test_escalation_stats_skip_is_row_identical(spark, tmp_path):
     assert got == want
 
 
-def test_candidate_prefix_small_is_row_identical(spark):
-    """``small=True`` must return exactly the two-phase prefix's rows
-    (it only skips the pre-pruning passes)."""
+def _heap_prefix(rows: list[dict], k: int) -> list[tuple]:
+    """Pure-Python reference: per site, the first ``k`` rows in heap
+    pop order ``(-depth, counter)``, ranked from 1."""
+    by_site: dict[str, list[dict]] = {}
+    for r in rows:
+        by_site.setdefault(r["site"], []).append(r)
+    out = []
+    for site_rows in by_site.values():
+        site_rows.sort(key=lambda r: (-r["depth"], r["counter"]))
+        out += [(r["site"], r["url"], r["host"], r["depth"], r["counter"],
+                 rank) for rank, r in enumerate(site_rows[:k], 1)]
+    return sorted(out)
+
+
+def _tie_frontier(spark):
+    """Three sites of 2400 / 900 / 300 rows over four depths (heavy
+    depth ties), counters shuffled and spread over four partitions so
+    the per-partition limits see interleaved ranks."""
+    import random
+
+    rnd = random.Random(7)
+    rows = []
+    for site, n in (("a", 2400), ("b", 900), ("c", 300)):
+        counters = list(range(n))
+        rnd.shuffle(counters)
+        rows += [{"site": site, "url": f"{site}/{c}", "host": f"h{c % 5}",
+                  "depth": rnd.randrange(4), "counter": c}
+                 for c in counters]
+    df = spark.createDataFrame(
+        rows, schema="site string, url string, host string, depth int, "
+                     "counter long").repartition(4)
+    return rows, df
+
+
+_WGL_KEY, _WGL_ENGINE = WINDOW_GROUP_LIMIT_CONF
+
+
+@contextmanager
+def _conf(spark, key: str, value: str):
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_candidate_prefix_matches_heap_reference(spark):
+    """The native top-K window returns exactly the heap-order prefix,
+    with and without the partial per-partition limit (Spark's default
+    threshold and the one the engine sets)."""
+    rows, frontier = _tie_frontier(spark)
+    for threshold in ("1000", _WGL_ENGINE):
+        with _conf(spark, _WGL_KEY, threshold):
+            for k in (1, 7, 50, 300, 1500, len(rows) + 1):
+                got = sorted(map(tuple,
+                                 candidate_prefix(frontier, k).collect()))
+                assert got == _heap_prefix(rows, k), \
+                    f"prefix_k={k} threshold={threshold} diverges"
+
+
+def test_engine_plans_partial_limit_before_exchange(spark, tmp_path):
+    """The engine lifts the optimizer's ``WindowGroupLimit`` threshold
+    on whatever session it is given (here one at Spark's default
+    1000), so a budget-sized prefix (K = 200·8+64) plans as a Partial
+    ``WindowGroupLimit`` below the exchange on site, with no Python
+    stage."""
     ship_package(spark)
-    rows = [
-        {"site": f"s{i % 3}", "url": f"u{i}", "host": "h",
-         "depth": i % 4, "counter": i}
-        for i in range(200)
-    ]
-    frontier = spark.createDataFrame(rows)
-    for k in (1, 7, 50, 300):
-        a = sorted(map(tuple, candidate_prefix(frontier, k).collect()))
-        b = sorted(map(tuple,
-                       candidate_prefix(frontier, k, small=True).collect()))
-        assert a == b, f"prefix_k={k} diverges"
+    fx, paths = _web(tmp_path)
+    _, frontier = _tie_frontier(spark)
+    with _conf(spark, _WGL_KEY, "1000"):
+        CrawlEngine(spark, str(tmp_path / "cat"), paths["pages"],
+                    fx.seeds, fx.robots, CrawlConfig(shuffle_partitions=4))
+        assert spark.conf.get(_WGL_KEY) == _WGL_ENGINE
+        plan = (candidate_prefix(frontier, 200 * 8 + 64)
+                ._jdf.queryExecution().executedPlan().toString())
+    lines = plan.splitlines()
+    partial = [i for i, ln in enumerate(lines)
+               if "WindowGroupLimit" in ln and ln.rstrip().endswith("Partial")]
+    site_exchange = [i for i, ln in enumerate(lines)
+                     if "Exchange hashpartitioning(site" in ln]
+    assert partial and site_exchange, plan
+    assert partial[0] > site_exchange[0], plan
+    assert "MapInPandas" not in plan and "PythonUDF" not in plan, plan
