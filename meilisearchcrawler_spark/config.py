@@ -131,17 +131,3 @@ class CrawlConfig:
     # bound keep AQE (runtime coalescing + skew splitting matter
     # there); compaction always runs under AQE. 0 disables.
     latency_round_rows: int = 100_000
-    # Eager stage flush: submit each staged delta write the moment the
-    # round declares it instead of holding every write to the barrier
-    # pool. Staged dirs are orphans until the manifest commit, so
-    # visibility/crash semantics are unchanged; the write jobs'
-    # scheduling overlaps the round's remaining barrier actions
-    # (concurrent first-materialization of a shared cached/
-    # localCheckpoint parent is safe — the round barrier already
-    # overlaps the metrics and Bloom-delta collects the same way) and
-    # the barrier flush only joins futures. Measured (round 5,
-    # scripts/bench_eagerflush_ab.py, interleaved one-JVM median-of-5
-    # on the bench.py crawl_round workload): 51.0 s deferred → 43.8 s
-    # eager (−14%, raw ranges non-overlapping), every per-round wall
-    # of the median run lower.
-    eager_stage: bool = True

@@ -97,8 +97,7 @@ def crawl_throughput(spark: SparkSession, n_sites: int = 8,
                      host_budget: int | None = None,
                      shuffle_partitions: int | None = None,
                      seed: int = 123,
-                     fanout: tuple[int, int] = (14, 24),
-                     cfg_extra: dict | None = None) -> dict:
+                     fanout: tuple[int, int] = (14, 24)) -> dict:
     """Full crawl over the bench web; returns pages/sec + composition."""
     fx, paths = bench_fixture(n_sites, pages_per_site, seed, fanout,
                               load_pages=False)
@@ -106,7 +105,7 @@ def crawl_throughput(spark: SparkSession, n_sites: int = 8,
     sp = shuffle_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32"))
     cfg = CrawlConfig(round_budget=round_budget, host_budget=host_budget,
-                      shuffle_partitions=sp, **(cfg_extra or {}))
+                      shuffle_partitions=sp)
     eng = CrawlEngine(spark, root, paths["pages"], fx.seeds, fx.robots, cfg,
                       initial_url_seen=fx.url_seen)
     t0 = time.perf_counter()

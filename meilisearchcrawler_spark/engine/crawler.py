@@ -69,8 +69,8 @@ Scale notes (10^10 frontier, 1000 executors):
 from __future__ import annotations
 
 import json
-import logging
 import os
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
@@ -101,8 +101,6 @@ from ..functions.urls import (
 from .bloom import PartitionedBloom, bitmap_delta, check_hashes
 from .catalog import CheckpointCatalog
 from .pagestore import load_store
-
-_log = logging.getLogger(__name__)
 
 FETCH_SCHEMA = StructType([
     StructField("site", StringType()),
@@ -339,9 +337,15 @@ class SiteState:
     # (pops are the only operation that removes frontier rows)
     pops_since_compact: int = 0
     # exact live-frontier row count (seeds + pushed − popped, updated
-    # from the same metrics rollup that feeds pops_since_compact).
-    # None = unknown (checkpoint predating the field) — every consumer
-    # falls back to the budget-only bound (_FRONTIER_SIZE_BOUNDS).
+    # from the same metrics rollup that feeds pops_since_compact). It
+    # is a true upper bound on every per-site round frame it gates: a
+    # site can't pop rows its frontier doesn't hold, and its candidate
+    # prefix can't exceed that frontier — so the latency-mode gate and
+    # the broadcast-hint guards see the round's real size, not a budget
+    # sized for mega-waves (the bench crawl's budget is 100k/site while
+    # its frontier never exceeds ~20k rows). None = unknown (a
+    # checkpoint predating the field, or frontier rows injected out of
+    # band) — every consumer falls back to the budget-only bound.
     frontier_rows: int | None = None
 
 
@@ -361,63 +365,8 @@ _HIST_RANKS = tuple(64 * 8 ** i for i in range(10))  # 64 … ~8.6e9
 # Concurrent snapshot writes per maintenance (compaction) pass — the
 # independent corpus-sized rewrites overlap; bounded to keep peak
 # execution-memory/spill pressure in check (1 = the pre-round-5 serial
-# behavior; scripts/bench_compact_ab.py measures the difference).
+# behavior; the round-5 A/B is recorded in scripts/compact_ab_out.json).
 _COMPACT_POOL_WORKERS = 4
-
-# Latency-mode static width policy: size the width to the selection
-# bound (sites × prefix_k — the largest frame any latency-round
-# exchange carries) rather than the ~64×-smaller pop bound. False =
-# the pre-round-5 pop-bound-only policy (scripts/bench_selwidth_ab.py
-# measures the difference).
-_LATENCY_WIDTH_FROM_SEL_BOUND = True
-
-# Round-6: derive the round's row-count bounds from the driver-tracked
-# per-site LIVE-FRONTIER sizes instead of the configured budgets alone.
-# The tracked size is exact (seeds + pushed − popped, both already in
-# the per-round metrics rollup), and every bound it feeds is a true
-# upper bound on the frame it gates:
-#   * pops per site ≤ live frontier rows (can't pop rows that don't
-#     exist) — so the latency-mode gate and the broadcast-hint guards
-#     see the ROUND's real size, not a budget sized for mega-waves
-#     (the bench crawl's budget is 100k/site while its frontier never
-#     exceeds ~20k rows: budget-only bounds kept every round on the
-#     AQE per-stage-submission path and dropped every forced
-#     broadcast hint).
-#   * a site whose live frontier is empty can never pop or push again
-#     (links are same-site), so it retires at round START — the
-#     crawl's final empty round costs zero Spark jobs instead of a
-#     full selection pipeline (~3 s at the bench shape).
-# Sizes resumed from a pre-round-6 checkpoint are unknown (None) and
-# fall back to the budget-only bounds. False = round-5 behavior
-# (scripts/bench_crawl_ab_r06.py measures the difference).
-_FRONTIER_SIZE_BOUNDS = True
-
-# Round-6: skip the Bloom prefilter (a Python-worker stage per call
-# site) while the visited table is under the adaptive-prune floor —
-# the exact membership check subsumes it at identical results (a Bloom
-# probe has no false negatives; ``_maybe=True`` is its no-information
-# answer). False = round-5 behavior (always probe).
-_BLOOM_PROBE_ADAPTIVE = True
-
-# Round-6 (second pass): two tracked-size-proven action skips.
-# (a) Skip the escalation stats collect when every budget site's
-# tracked live frontier is smaller than prefix_k — no site can fill
-# its prefix, so escalation is impossible and the collect is a
-# driver-blocking job serialized between selection and fetch; the
-# popped checkpoint then materializes inside the round's first eager
-# job instead. (b) Skip run_round's existence-only _live_frontier()
-# build (a per-round catalog parquet read) when any tracked size
-# proves frontier rows exist. False = round-6-first-pass behavior
-# (the measuring arm of scripts/bench_statskip_ab.py).
-_ESCALATION_STATS_SKIP = True
-
-# Round-6 (second pass): on the skip path, kick an async noop
-# materialization of the admission frame so the selection pipeline
-# executes on the executors while the driver plans the popped
-# checkpoint + early _execute_round frames (guide §2.6). False = plan
-# first, materialize in the first eager job
-# (scripts/bench_preselkick_ab.py measures the difference).
-_PRESEL_KICK = True
 
 
 class CrawlEngine:
@@ -470,10 +419,10 @@ class CrawlEngine:
                                        bits_per_partition=1 << 17)
         self._bloom_bc = None
         self._bloom_table: DataFrame | None = None
-        self._eager_pool = None
-        # async pre-selection materialization futures (the skip-path
-        # cand noop kick in _select_pops), settled when the round ends
-        self._presel_futs: list = []
+        # one pool per ENGINE for the round's eager staged writes and
+        # overlapped collects, reused across rounds; its threads start
+        # lazily, so an unused engine costs nothing
+        self._eager_pool = ThreadPoolExecutor(max_workers=16)
         self._initial_url_seen = initial_url_seen or []
         self._restore_or_init()
 
@@ -847,9 +796,7 @@ class CrawlEngine:
         # no-frontier-at-all case; when any tracked size proves rows
         # exist, skip the per-round catalog read (driver-side parquet
         # listing + plan construction) that the view costs
-        if not (_ESCALATION_STATS_SKIP and _FRONTIER_SIZE_BOUNDS
-                and any(st.frontier_rows for st in self.sites.values()
-                        if st.frontier_rows is not None)):
+        if not any(st.frontier_rows for st in self.sites.values()):
             if self._live_frontier() is None:
                 for s in self.sites.values():
                     s.active = False
@@ -857,21 +804,18 @@ class CrawlEngine:
         # per-site budgets (max_pages semantics, crawler.py:1155-1160)
         budgets = {}
         for name, st in self.sites.items():
-            if not st.active:
+            # a site whose tracked live frontier is empty can never pop
+            # or push again (links are same-site): it gets no budget and
+            # retires at round start, before any Spark job — when every
+            # site is empty the crawl's final round runs no job instead
+            # of a full selection pipeline (~3 s at the bench shape)
+            if not st.active or st.frontier_rows == 0:
                 continue
             mp = self.site_configs[name]["max_pages"]
             b = self.cfg.round_budget
             if mp and mp > 0:
                 b = min(b, mp - st.pages_visited)
             budgets[name] = max(b, 0)
-        if _FRONTIER_SIZE_BOUNDS:
-            # a site whose tracked live frontier is empty can never pop
-            # or push again (links are same-site): retire it at round
-            # start, before any Spark job — when every site is empty
-            # the crawl's final round costs nothing
-            for name in list(budgets):
-                if self.sites[name].frontier_rows == 0:
-                    budgets.pop(name)
         active_sites = [n for n, b in budgets.items() if b > 0]
         for name, st in self.sites.items():
             if st.active and name not in active_sites:
@@ -880,20 +824,13 @@ class CrawlEngine:
             return False
         budgets = {s: budgets[s] for s in active_sites}
 
-        def _fr(name: str) -> int | None:
-            return (self.sites[name].frontier_rows
-                    if _FRONTIER_SIZE_BOUNDS else None)
-
         # row-count bound for this round's popped set, used to gate the
         # forced-broadcast hints and the latency-mode compile: the
         # cutoff admits ≤ budget admissible rows and < budget
         # inadmissible rows per site, and no site can pop more rows
         # than its live frontier holds — take the tighter of the two
-        # (frontier sizes are exact driver state; unknown = None falls
-        # back to the budget-only bound)
-        self._pop_bound = sum(
-            2 * b if _fr(s) is None else min(2 * b, _fr(s))
-            for s, b in budgets.items())
+        self._pop_bound = sum(self._site_bound(s, 2 * b)
+                              for s, b in budgets.items())
         # row-count bound for the SELECTION pipeline's intermediate
         # frames (candidate prefix + admission): min(prefix_k, live
         # frontier rows) per site at the escalation's first iteration
@@ -904,9 +841,7 @@ class CrawlEngine:
         # funnels a ~10^5-row prefix through width-1 exchanges
         # (a single-task final top-K limit + window).
         pk0 = max(budgets.values()) * 8 + 64
-        self._sel_bound = sum(
-            pk0 if _fr(s) is None else min(pk0, _fr(s))
-            for s in budgets)
+        self._sel_bound = sum(self._site_bound(s, pk0) for s in budgets)
 
         # broadcast mode: one Bloom broadcast per round, shared by
         # admission and link dedup, released at the round barrier
@@ -915,7 +850,7 @@ class CrawlEngine:
         # one latest-wins view per round feeds the cogrouped probes.
         # Rounds that will skip the probe (visited under the adaptive
         # floor, see _bloom_split) skip the broadcast/view too.
-        self._bloom_probe_skip = _BLOOM_PROBE_ADAPTIVE and (
+        self._bloom_probe_skip = (
             self.catalog.table_bytes("visited") < self.cfg.prune_min_bytes)
         if self._bloom_probe_skip:
             self._bloom_bc = None
@@ -937,8 +872,6 @@ class CrawlEngine:
                     return False
                 progressed = self._execute_round(popped, now)
         finally:
-            # before the frames it reads are released below
-            self._join_presel()
             for df in self._round_tmp:
                 df.unpersist()
             self._round_tmp = []
@@ -952,25 +885,12 @@ class CrawlEngine:
             self._compact()
         return progressed
 
-    def _join_presel(self) -> None:
-        """Settle the round's advisory pre-selection futures, on every
-        way out of the round: cancel the still-queued ones, wait for
-        the running ones (their job reads frames the round is about to
-        release), and log their failures instead of raising them. The
-        noop only warms the persisted admission frame: the round's
-        real consumers surface a genuine error themselves, and on the
-        success path the round's writes have already committed."""
-        futs, self._presel_futs = self._presel_futs, []
-        for fut in futs:
-            fut.cancel()
-        for fut in futs:
-            if fut.cancelled():
-                continue
-            try:
-                fut.result()
-            except Exception:
-                _log.warning("advisory pre-selection materialization "
-                             "failed", exc_info=True)
+    def _site_bound(self, name: str, cap: int) -> int:
+        """``cap`` tightened by the site's tracked live-frontier size
+        (no per-site round frame can exceed it); an unknown size keeps
+        the budget-only ``cap``."""
+        rows = self.sites[name].frontier_rows
+        return cap if rows is None else min(cap, rows)
 
     @contextmanager
     def _latency_mode(self):
@@ -1005,9 +925,7 @@ class CrawlEngine:
         # get 8-wide exchanges (measured at the frontier10m harness:
         # a 2k-URL round over 16 sites has a ~257k-row prefix bound,
         # and width 1 serialized the final top-K + admission window)
-        bound = self._pop_bound
-        if _LATENCY_WIDTH_FROM_SEL_BOUND:
-            bound = max(bound, getattr(self, "_sel_bound", 0))
+        bound = max(self._pop_bound, self._sel_bound)
         # width 1 only for genuinely micro rounds (equivalence/drain
         # tails): a few-thousand-pop round can still explode 10-20×
         # that many LINKS through its dedup exchanges (round-6: the
@@ -1208,14 +1126,8 @@ class CrawlEngine:
             # immediately instead of holding superseded prefix/probe/
             # admission copies in executor storage until the barrier
             it_tmp = len(self._round_tmp)
-            if _FRONTIER_SIZE_BOUNDS:
-                # per-site prefix rows ≤ min(prefix_k, live frontier)
-                self._prefix_bound = sum(
-                    prefix_k if self.sites[s].frontier_rows is None
-                    else min(prefix_k, self.sites[s].frontier_rows)
-                    for s in budgets)
-            else:
-                self._prefix_bound = len(budgets) * prefix_k
+            self._prefix_bound = sum(self._site_bound(s, prefix_k)
+                                     for s in budgets)
             frontier = self._pop_frontier(budgets, prefix_k)
             if frontier is None:
                 return None
@@ -1245,7 +1157,7 @@ class CrawlEngine:
             # n_rank comes from the UNFILTERED prefix (the host-budget
             # filter may drop the last-ranked row from cand, which must
             # not mask a full prefix); n_adm from the admission frame.
-            # Round-6: when every budget site's tracked live frontier
+            # When every budget site's tracked live frontier
             # is provably SMALLER than prefix_k, no site can fill its
             # prefix (n_rank ≤ frontier_rows < prefix_k), so escalation
             # is impossible and the stats collect — one driver-blocking
@@ -1255,28 +1167,10 @@ class CrawlEngine:
             # fetch kick) instead of its own synchronous action. Sites
             # with untracked sizes (None) keep the stats path; a
             # retirement-emptied budgets dict never reaches here.
-            if (_ESCALATION_STATS_SKIP and _FRONTIER_SIZE_BOUNDS and all(
-                    self.sites[s].frontier_rows is not None
-                    and self.sites[s].frontier_rows < prefix_k
-                    for s in budgets)):
+            if all(self.sites[s].frontier_rows is not None
+                   and self.sites[s].frontier_rows < prefix_k
+                   for s in budgets):
                 stats = under = None
-                # with no stats collect, nothing runs on the executors
-                # while the driver plans the popped checkpoint and the
-                # early _execute_round frames (§2.6 overlap): kick an
-                # async noop materialization of the persisted admission
-                # frame — the exact compute every downstream job needs
-                # first — so the selection pipeline (windows, Bloom
-                # probe, robots UDF) executes concurrently with that
-                # planning. Settled when the round ends (_join_presel).
-                if _PRESEL_KICK and self.cfg.eager_stage:
-                    if self._eager_pool is None:
-                        from concurrent.futures import ThreadPoolExecutor
-
-                        self._eager_pool = ThreadPoolExecutor(max_workers=16)
-                    cand_f = cand
-                    self._presel_futs.append(self._eager_pool.submit(
-                        lambda: cand_f.write.format("noop")
-                        .mode("overwrite").save()))
             else:
                 stats = {r["site"]: (r["n_adm"], r["n_rank"]) for r in
                          prefix.groupBy("site").agg(F.max("_rank").alias("n_rank"))
@@ -1309,40 +1203,24 @@ class CrawlEngine:
     def _execute_round(self, popped: DataFrame, now: float) -> bool:
         cfg = self.cfg
         rno = self.round_no
-        # staging is deferred and written through a thread pool at the
-        # round barrier: ~10 small table writes per round each carry
-        # fixed job overhead, and every parent frame is persisted and
-        # already materialized by the metrics collect, so the parallel
-        # writes only read cache — wall time ≈ max, not sum (the main
-        # driver of small-round orchestration cost)
-        pending: list[tuple[str, DataFrame]] = []
-        pre_staged: dict[str, list[str]] = {}
-        # eager mode: each staged write is submitted the moment it is
-        # declared — its job overlaps the round's remaining barrier
-        # actions (bucket-prune collect, link count, metrics rollup)
-        # and the barrier flush only joins futures. Concurrent
+        # each staged write is submitted to the engine's pool the moment
+        # it is declared: its job overlaps the round's remaining
+        # barrier actions (bucket-prune collect, link count, metrics
+        # rollup) and the barrier only joins futures. Staged dirs are
+        # orphans until the manifest commit, so visibility and crash
+        # semantics don't depend on when they are written. Concurrent
         # first-materialization of a shared persisted/localCheckpoint
-        # parent is BlockManager-locked (the barrier already overlaps
-        # the metrics and Bloom collects the same way).
-        eager_pool = None
-        eager_futs: list[tuple[str, object]] = []
-        if cfg.eager_stage:
-            # one pool per ENGINE, reused across rounds (threads spawn
-            # lazily and idle between rounds; a fresh 16-thread pool
-            # per round was pure churn — round-5 verdict minor #3)
-            if self._eager_pool is None:
-                from concurrent.futures import ThreadPoolExecutor
-
-                self._eager_pool = ThreadPoolExecutor(max_workers=16)
-            eager_pool = self._eager_pool
+        # parent is BlockManager-locked. Measured against holding every
+        # write to a barrier flush (round 5, interleaved one-JVM
+        # median-of-5 on the bench.py crawl_round workload): 51.0 s →
+        # 43.8 s (scripts/eagerflush_ab_out.json).
+        pool = self._eager_pool
+        staged_futs: list[tuple[str, object]] = []
+        pre_staged: dict[str, list[str]] = {}
 
         def stage(table: str, df: DataFrame):
-            if eager_pool is not None:
-                eager_futs.append(
-                    (table, eager_pool.submit(self.catalog.stage, table,
-                                              df, rno)))
-            else:
-                pending.append((table, df))
+            staged_futs.append(
+                (table, pool.submit(self.catalog.stage, table, df, rno)))
 
         def stage_rows(table: str, rows: list[dict], schema) -> None:
             # driver-resident rows: direct pyarrow write, no Spark job
@@ -1350,27 +1228,11 @@ class CrawlEngine:
                 self.catalog.stage_rows(table, rows, schema, rno))
 
         def _flush_stages() -> dict[str, list[str]]:
-            from concurrent.futures import ThreadPoolExecutor
-
             staged: dict[str, list[str]] = {k: list(v)
                                             for k, v in pre_staged.items()}
-            if eager_pool is not None:
-                # join futures only — the engine-owned pool outlives
-                # the round
-                for t, fut in eager_futs:
-                    staged.setdefault(t, []).append(fut.result())
-                for fut in kick_futs:
-                    fut.result()
-                return staged
-            # one thread per staged table: each write is a small job
-            # over cached parents, so the flush wall is the slowest
-            # write, not the sum (pool-summed ~5 s/round at the
-            # frontier10m harness with the old 8-thread cap)
-            with ThreadPoolExecutor(max_workers=max(len(pending), 1)) as ex:
-                futures = [(t, ex.submit(self.catalog.stage, t, df, rno))
-                           for t, df in pending]
-                for t, fut in futures:
-                    staged.setdefault(t, []).append(fut.result())
+            for t, fut in staged_futs:
+                staged.setdefault(t, []).append(fut.result())
+            fetch_kick.result()
             return staged
 
         # crawl_log: the ordering-equivalence artifact (FIXTURES.md §7)
@@ -1426,11 +1288,8 @@ class CrawlEngine:
         # buys the overlap; failure surfacing is unchanged (the write
         # that shares the checkpoint re-raises the same error, and the
         # future is joined at the barrier).
-        kick_futs: list = []
-        if eager_pool is not None:
-            kick_futs.append(eager_pool.submit(
-                lambda: fetched.write.format("noop")
-                .mode("overwrite").save()))
+        fetch_kick = pool.submit(
+            lambda: fetched.write.format("noop").mode("overwrite").save())
         # ---- indexing decision (crawler.py:1033-1058) ----
         ok = fetched.filter(F.col("fetch_status") == 200)
         # seen-log lookup keyed by final URL, pruned to this round's
@@ -1620,14 +1479,7 @@ class CrawlEngine:
                     .applyInPandas(build_delta, schema="pid int, bits binary"))
         fut_delta = None
         if self.cfg.bloom_probe_mode == "broadcast":
-            if eager_pool is not None:
-                fut_delta = eager_pool.submit(delta_df.collect)
-            else:
-                from concurrent.futures import ThreadPoolExecutor
-
-                _delta_pool = ThreadPoolExecutor(max_workers=1)
-                fut_delta = _delta_pool.submit(delta_df.collect)
-                _delta_pool.shutdown(wait=False)
+            fut_delta = pool.submit(delta_df.collect)
         else:
             # table mode: merge executor-side (broadcast join on the
             # ≤P-row parts view); no bitmap ever reaches the driver
@@ -1691,8 +1543,7 @@ class CrawlEngine:
                         .unionByName(idx_counts)
                         .unionByName(cache_skip_counts)
                         .withColumn("round", F.lit(rno)))
-        fut_metrics = (eager_pool.submit(metrics_head.collect)
-                       if eager_pool is not None else None)
+        fut_metrics = pool.submit(metrics_head.collect)
         # lineage (S9) depends only on the fetched frame — stage it
         # here so its write overlaps the link-dedup stats job instead
         # of queueing behind the whole adds pipeline
@@ -1749,10 +1600,7 @@ class CrawlEngine:
         # ---- barrier: metrics rollup + the early-submitted Bloom
         # delta (broadcast mode; its job has been running since the
         # visited section — by now it is usually done) ----
-        if fut_metrics is not None:
-            metrics_rows = fut_metrics.result() + pushed_counts.collect()
-        else:
-            metrics_rows = metrics_head.unionByName(pushed_counts).collect()
+        metrics_rows = fut_metrics.result() + pushed_counts.collect()
         if fut_delta is not None:
             delta_rows = fut_delta.result()
             if delta_rows:
@@ -1854,8 +1702,6 @@ class CrawlEngine:
         production scale these are corpus-sized shuffles and running
         all of them at once trades straggler overlap against peak
         execution-memory/spill pressure."""
-        from concurrent.futures import ThreadPoolExecutor
-
         live = self._live_frontier()
         if live is not None:
             live = live.persist()
@@ -2056,8 +1902,6 @@ class CrawlEngine:
         pushed only if the frontier is under the cap at that page's
         turn. Sequential recurrence over per-page counts — tiny
         driver-side array, only when a cap is configured."""
-        from concurrent.futures import ThreadPoolExecutor
-
         cap = self.cfg.max_queue_size
         live = self._live_frontier()
         # three independent tiny rollups — overlap their job overhead

@@ -3,8 +3,10 @@ escalation-stats skip, and the native per-site candidate prefix. They
 only change PLAN shape / driver bookkeeping — these tests pin (a) the
 tracked size against the actual live frontier every round, (b) that a
 legacy checkpoint (state without ``frontier_rows``) still resumes and
-completes identically, and (c) the candidate prefix against a
-pure-Python heap-order reference, plus its partial-limit plan shape."""
+completes identically, (c) the skip against the stats path on both
+sides of its ``prefix_k`` precondition, and (d) the candidate prefix
+against a pure-Python heap-order reference, plus its partial-limit
+plan shape."""
 
 from __future__ import annotations
 
@@ -18,7 +20,7 @@ from meilisearchcrawler_spark.config import CrawlConfig
 from meilisearchcrawler_spark.engine.crawler import (
     WINDOW_GROUP_LIMIT_CONF, CrawlEngine, candidate_prefix)
 from meilisearchcrawler_spark.fixtures.webgen import generate_web, write_parquet
-
+from meilisearchcrawler_spark.oracle.refcrawler import crawl_site
 from meilisearchcrawler_spark.session import ship_package
 
 
@@ -107,30 +109,84 @@ def test_legacy_state_without_frontier_rows_resumes(spark, tmp_path):
 
 def test_escalation_stats_skip_is_row_identical(spark, tmp_path):
     """With tracked sizes under ``prefix_k`` the escalation stats
-    collect is skipped (round-6). The crawl_log must be identical to
-    the stats-path run (tracking disabled module-wide), and the skip
-    must never fire when a site's frontier could fill its prefix."""
-    from meilisearchcrawler_spark.engine import crawler as crawler_mod
-
+    collect is skipped. The crawl_log must be identical to a run whose
+    sizes are unknown from round 1 on (every site's ``frontier_rows``
+    set to None on a fresh engine — the public budget-only fallback),
+    which puts every round on the stats path."""
     ship_package(spark)
     fx, paths = _web(tmp_path)
     cfg = dict(round_budget=6, shuffle_partitions=4)
 
-    def log_of(root):
+    def run(root, untracked):
         eng = CrawlEngine(spark, root, paths["pages"], fx.seeds, fx.robots,
                           CrawlConfig(**cfg), initial_url_seen=fx.url_seen)
+        if untracked:
+            for st in eng.sites.values():
+                st.frontier_rows = None
         eng.run(max_rounds=300)
-        return sorted(map(tuple, eng.catalog.read("crawl_log")
-                          .select("site", "round", "pos_in_round", "url",
-                                  "counter", "action").collect()))
+        log = sorted(map(tuple, eng.catalog.read("crawl_log")
+                         .select("site", "round", "pos_in_round", "url",
+                                 "counter", "action").collect()))
+        return eng, log
 
-    want = log_of(str(tmp_path / "skip"))      # tracked: skip active
-    crawler_mod._FRONTIER_SIZE_BOUNDS = False  # stats path for every round
-    try:
-        got = log_of(str(tmp_path / "stats"))
-    finally:
-        crawler_mod._FRONTIER_SIZE_BOUNDS = True
+    tracked, want = run(str(tmp_path / "skip"), untracked=False)
+    assert all(s.frontier_rows == 0 for s in tracked.sites.values())
+    untracked, got = run(str(tmp_path / "stats"), untracked=True)
+    # unknown stays unknown: no round of this run could take the skip
+    assert all(s.frontier_rows is None for s in untracked.sites.values())
     assert got == want
+
+
+def test_stats_path_when_frontier_fills_prefix(spark, tmp_path):
+    """The skip's precondition, from the other side: with tracking on,
+    a site whose tracked frontier reaches ``prefix_k`` (72 at
+    ``round_budget=1``) must keep the stats path. The seed page links
+    80 site-excluded URLs before its crawlable ones, so round 1's
+    first 72 candidates are all inadmissible: only the stats collect
+    sees that and escalates the prefix — a skipped collect would pop
+    the 72 exclusions and admit nothing that round. The capped crawl
+    must match the sequential reference: admitted sequence, url_seen
+    and visited."""
+    ship_package(spark)
+    fx = generate_web(seed=19, n_sites=1, pages_per_site=30)
+    site_cfg = fx.seeds[0]
+    seed_page = next(p for p in fx.pages
+                     if p["url"].rstrip("/") == site_cfg["seed_url"].rstrip("/"))
+    html = seed_page["html"]
+    at = html.index("<a href=")
+    seed_page["html"] = (html[:at]
+                         + "".join(f'<a href="/private/e{i}">l</a>'
+                                   for i in range(80))
+                         + html[at:])
+    out = tmp_path / "web"
+    out.mkdir()
+    paths = write_parquet(fx, str(out))
+    rounds, prefix_k = 4, 1 * 8 + 64
+    eng = CrawlEngine(spark, str(tmp_path / "cat"), paths["pages"], fx.seeds,
+                      fx.robots, CrawlConfig(round_budget=1,
+                                             shuffle_partitions=4),
+                      initial_url_seen=fx.url_seen)
+    at_start = []
+    for _ in range(rounds):
+        at_start.append(eng.sites[site_cfg["site"]].frontier_rows)
+        eng.run_round()
+    assert max(at_start) >= prefix_k, at_start
+
+    orc = crawl_site(fx, site_cfg, batch_size=1, max_rounds=rounds)
+    log = eng.catalog.read("crawl_log").collect()
+    got = sorted((r["round"], r["pos_in_round"], r["url"], r["counter"])
+                 for r in log if r["action"] == "admitted")
+    want = [(r["round"], r["pos_in_round"], r["url"], r["counter"])
+            for r in orc.crawl_log if r["action"] == "admitted"]
+    assert got == want
+    fields = ("content_hash", "doc_id", "last_crawl", "etag",
+              "last_modified")
+    e_seen = {r["url"]: tuple(r[k] for k in fields)
+              for r in eng.url_seen().collect()}
+    o_seen = {u: tuple(e.get(k) for k in fields)
+              for u, e in orc.url_seen.items()}
+    assert e_seen == o_seen
+    assert {r["url"] for r in eng.visited().collect()} == orc.visited
 
 
 def _heap_prefix(rows: list[dict], k: int) -> list[tuple]:
