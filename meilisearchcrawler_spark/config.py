@@ -90,14 +90,13 @@ class CrawlConfig:
     # Salt factor for hot-host skew: hosts whose round quota exceeds
     # this many rows get spread over multiple shuffle partitions.
     host_partition_rows: int = 10_000
-    bloom_num_partitions: int = 64     # power of two (bloom.py pmod note)
-    bloom_bits_per_key: int = 10
-    # "broadcast": driver holds the partition bitmaps and broadcasts
-    # them once per round — right while the whole filter is ≤ ~100 MB.
-    # "cogroup": the filter lives only as the committed bloom_parts
-    # table; probes cogroup by pid and deltas merge executor-side — the
-    # production shape (4096 × ~3 MB never transits the driver).
-    bloom_probe_mode: str = "broadcast"
+    bloom_num_partitions: int = 64     # power of two (CrawlEngine checks)
+    # The only value is "cogroup": the filter lives only as the
+    # committed bloom_parts table, probes cogroup with it by pid and
+    # deltas merge executor-side (4096 × ~3 MB never transits the
+    # driver). The field stays so configs that name the mode keep
+    # working; CrawlEngine rejects any other value.
+    bloom_probe_mode: str = "cogroup"
     # Fold table deltas every N rounds (Iceberg rewrite_data_files
     # analog) — bounds the union-read fan-in of hot tables.
     compact_every: int = 8

@@ -10,30 +10,37 @@ tests). Properties:
 * **pre-filter only, never authoritative**: a positive routes the
   candidate into the exact anti-join against the seen table; a negative
   skips that shuffle entirely. Seen-set equality stays exact.
-* **incrementally checkpointable**: deltas are built *executor-side*
-  (``bitmap_delta`` under ``groupBy(pmod(url_hash, P)).applyInPandas``)
-  — the driver only ever sees ≤P bounded bitmap blobs per round, never
-  the per-URL hashes — and the merged partitions commit atomically as
-  the ``bloom_parts`` table with the round's other deltas.
-* **two probe shapes**: ``broadcast`` (driver-held parts, one broadcast
-  per round; right while the filter is ≤ ~100 MB) and ``cogroup`` (the
-  filter lives only in the bloom_parts table; probe rows cogroup with
-  it by partition id — the production shape where the full filter is
-  GBs and must not transit the driver).
-* **vectorized membership**: numpy bit ops over Arrow batches inside
-  ``mapInPandas`` — no per-row Python.
+* **created at compaction, then merged per round**: the filter only
+  pays once the visited table is big enough for the exact check to
+  cost, so it is first built in one pass over the compacted visited
+  snapshot by the compaction that finds it at the engine's probe floor
+  (``prune_min_bytes``). Every later round builds its delta
+  *executor-side* (``bitmap_delta`` under
+  ``groupBy(pmod(url_hash, P)).applyInPandas``) and ORs it into the
+  committed bitmaps; the merged partitions commit atomically as the
+  ``bloom_parts`` table with the round's other deltas. The driver never
+  sees the per-URL hashes or a bitmap.
+* **one probe shape**: the filter lives only in the ``bloom_parts``
+  table; probe rows cogroup with it by partition id, so the full filter
+  (GBs at production scale) never transits the driver.
+* **vectorized membership**: numpy bit ops over Arrow batches — no
+  per-row Python.
 
 Hashing: the two Bloom probe hashes derive from the already-computed
 ``xxhash64(canonical_url)`` (Kirsch-Mitzenmacher double hashing), so
 executors never touch URL strings.
 """
-
 from __future__ import annotations
 
 import numpy as np
 
 _MIX1 = np.uint64(0xFF51AFD7ED558CCD)
 _MIX2 = np.uint64(0xC4CEB9FE1A85EC53)
+
+# bits per partition bitmap (16 KB) and probe count; the partition
+# count is CrawlConfig.bloom_num_partitions
+BITS_PER_PARTITION = 1 << 17
+NUM_HASHES = 7
 
 
 def _mix(h: np.ndarray) -> np.ndarray:
@@ -73,48 +80,4 @@ def check_hashes(hashes: np.ndarray, part: np.ndarray, bits: int,
         byte = part[(pos >> np.uint64(3)).astype(np.int64)]
         hit &= (byte >> (pos & np.uint64(7)).astype(np.uint8)) & 1 == 1
     return hit
-
-
-class PartitionedBloom:
-    def __init__(self, num_partitions: int = 64, bits_per_partition: int = 1 << 20,
-                 num_hashes: int = 7):
-        # power-of-two partition count makes signed pmod(h, P) (Spark)
-        # equal to unsigned h % P (numpy): 2^64 ≡ 0 (mod P)
-        assert num_partitions & (num_partitions - 1) == 0, \
-            "num_partitions must be a power of two"
-        self.num_partitions = num_partitions
-        self.bits = bits_per_partition
-        self.k = num_hashes
-        self.parts = [np.zeros(self.bits // 8, dtype=np.uint8)
-                      for _ in range(num_partitions)]
-
-    def or_delta(self, pid: int, delta: bytes) -> None:
-        """OR an executor-built bitmap delta into one partition."""
-        self.parts[int(pid)] |= np.frombuffer(delta, dtype=np.uint8)
-
-    # -- core -------------------------------------------------------------
-
-    def _partition_of(self, h: np.ndarray) -> np.ndarray:
-        return (h % np.uint64(self.num_partitions)).astype(np.int64)
-
-    def _probe_positions(self, h: np.ndarray) -> list[np.ndarray]:
-        h1 = h
-        h2 = _mix(h) | np.uint64(1)
-        return [((h1 + np.uint64(i) * h2) % np.uint64(self.bits)) for i in range(self.k)]
-
-    def might_contain(self, hashes: np.ndarray) -> np.ndarray:
-        """Vectorized membership for an Arrow batch of int64 hashes."""
-        h = hashes.astype(np.uint64)
-        pids = self._partition_of(h)
-        out = np.ones(len(h), dtype=bool)
-        for pid in np.unique(pids):
-            mask = pids == pid
-            part = self.parts[int(pid)]
-            sub = h[mask]
-            hit = np.ones(mask.sum(), dtype=bool)
-            for pos in self._probe_positions(sub):
-                byte = part[(pos >> np.uint64(3)).astype(np.int64)]
-                hit &= (byte >> (pos & np.uint64(7)).astype(np.uint8)) & 1 == 1
-            out[mask] = hit
-        return out
 

@@ -100,10 +100,10 @@ class CheckpointCatalog:
                    round_no: int) -> str:
         """Stage DRIVER-resident rows as one parquet file via a direct
         pyarrow write — no Spark job. The round barrier already holds
-        the metrics rollup (and, in broadcast Bloom mode, the merged
-        bitmaps) as Python lists; a distributed write job for ~40 rows
-        costs more scheduling than the data (round-5 action profile:
-        ~0.5-1 s apiece at the frontier10m harness). ``schema`` is a
+        the metrics rollup as a Python list; a distributed write job
+        for ~40 rows costs more scheduling than the data (round-5
+        action profile: ~0.5-1 s apiece at the frontier10m harness).
+        ``schema`` is a
         ``pyarrow.Schema`` matching what ``spark.read.parquet`` must
         union with the table's Spark-written deltas."""
         import pyarrow as pa

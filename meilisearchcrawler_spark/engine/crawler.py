@@ -15,7 +15,8 @@ One round is the distributed form of one reference batch iteration
       → link explode + dedup + counter assignment  (insertion-order equivalence)
       → atomic catalog commit                      (frontier Δ, url_seen Δ,
                                                     documents Δ, visited Δ,
-                                                    metrics, bloom_parts Δ,
+                                                    metrics, bloom_parts Δ
+                                                    once the filter exists,
                                                     state)
 
 Ordering equivalence with the reference heap (SURVEY.md §7 hard part 1):
@@ -56,9 +57,11 @@ Scale notes (10^10 frontier, 1000 executors):
   visited / content_hashes membership checks scan those tables with a
   broadcast build side (duplicate-insensitive semi/anti), bucket-pruned
   the same way; corpus-sized windows/aggregates run only at compaction.
-* the visited-set membership check is Bloom-prefiltered:
+* the visited-set membership check is Bloom-prefiltered from the
+  compaction that finds ``visited`` at or over ``prune_min_bytes`` on:
   definite-negatives (the overwhelming majority of discovered links)
-  skip the exact check entirely.
+  skip the exact check entirely. Below that floor no filter exists and
+  every row takes the exact check, which is cheap there.
 * hot hosts are spread by salted host-hash repartition before the
   fetch UDF (`xxhash64(host, counter % salt)`), so one host's
   politeness budget never serializes a whole partition.
@@ -76,6 +79,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -98,7 +102,7 @@ from ..functions.urls import (
     normalize_url,
     url_hash_col,
 )
-from .bloom import PartitionedBloom, bitmap_delta, check_hashes
+from .bloom import BITS_PER_PARTITION, NUM_HASHES, bitmap_delta, check_hashes
 from .catalog import CheckpointCatalog
 from .pagestore import load_store
 
@@ -379,6 +383,15 @@ class CrawlEngine:
         # session (see WINDOW_GROUP_LIMIT_CONF)
         spark.conf.set(*WINDOW_GROUP_LIMIT_CONF)
         self.cfg = config or CrawlConfig()
+        if self.cfg.bloom_probe_mode != "cogroup":
+            raise ValueError("bloom_probe_mode must be 'cogroup', got "
+                             f"{self.cfg.bloom_probe_mode!r}")
+        # power of two: Spark's signed pmod(h, P) then equals numpy's
+        # unsigned h % P (2^64 ≡ 0 mod P)
+        P = self.cfg.bloom_num_partitions
+        if P <= 0 or P & (P - 1):
+            raise ValueError(f"bloom_num_partitions must be a power of two, "
+                             f"got {P}")
         self.catalog = CheckpointCatalog(spark, catalog_root)
         self.pages_path = pages_path
         self.seeds = {s["site"]: s for s in seeds}
@@ -415,9 +428,6 @@ class CrawlEngine:
             _rob_allow_all=[bool(r.get("fetch_fails"))
                             for r in self.robots.values()],
         ) if self.robots else None
-        self._bloom = PartitionedBloom(self.cfg.bloom_num_partitions,
-                                       bits_per_partition=1 << 17)
-        self._bloom_bc = None
         self._bloom_table: DataFrame | None = None
         # one pool per ENGINE for the round's eager staged writes and
         # overlapped collects, reused across rounds; its threads start
@@ -433,13 +443,10 @@ class CrawlEngine:
         if state.get("sites"):
             self.round_no = int(state["round"])
             self.sites = {k: SiteState(**v) for k, v in state["sites"].items()}
-            self._load_bloom_from_table()
             return
         self.round_no = 0
         self.sites = {name: SiteState(url_counter=1, frontier_rows=1)
                       for name in self.seeds}
-        from ..functions.urls import normalize_url
-
         rows = [
             {"site": name, "url": normalize_url(s["seed_url"]),
              "host": _host_of(s["seed_url"]), "depth": 0, "counter": 0}
@@ -460,19 +467,6 @@ class CrawlEngine:
                                                  self.cfg.seen_buckets))
             staged["url_seen_log"] = [self.catalog.stage("url_seen_log", seen0, 0)]
         self.catalog.commit_round(-1, staged, self._state_dict())
-
-    def _load_bloom_from_table(self) -> None:
-        """Broadcast mode resume: rebuild the driver copy from the
-        committed ``bloom_parts`` table (cogroup mode reads the table
-        directly and keeps nothing on the driver)."""
-        if self.cfg.bloom_probe_mode != "broadcast":
-            return
-        latest = self._bloom_latest()
-        if latest is None:
-            return
-        for r in latest.select("pid", "bits").collect():
-            self._bloom.parts[int(r["pid"])] = np.frombuffer(
-                r["bits"], dtype=np.uint8).copy()
 
     def _bloom_latest(self) -> DataFrame | None:
         """Latest committed bitmap per partition id (latest-wins view of
@@ -843,25 +837,11 @@ class CrawlEngine:
         pk0 = max(budgets.values()) * 8 + 64
         self._sel_bound = sum(self._site_bound(s, pk0) for s in budgets)
 
-        # broadcast mode: one Bloom broadcast per round, shared by
-        # admission and link dedup, released at the round barrier
-        # (leaking one copy per round would OOM the executors).
-        # cogroup mode: the filter never leaves the bloom_parts table —
-        # one latest-wins view per round feeds the cogrouped probes.
-        # Rounds that will skip the probe (visited under the adaptive
-        # floor, see _bloom_split) skip the broadcast/view too.
-        self._bloom_probe_skip = (
-            self.catalog.table_bytes("visited") < self.cfg.prune_min_bytes)
-        if self._bloom_probe_skip:
-            self._bloom_bc = None
-            self._bloom_table = None
-        elif self.cfg.bloom_probe_mode == "broadcast":
-            self._bloom_bc = self.spark.sparkContext.broadcast(
-                [p for p in self._bloom.parts])
-            self._bloom_table = None
-        else:
-            self._bloom_bc = None
-            self._bloom_table = self._bloom_latest()
+        # the filter never leaves the bloom_parts table — one
+        # latest-wins view per round feeds the cogrouped probes and the
+        # delta merge. It is None until a compaction creates the filter
+        # (see _compact); such a round runs no Bloom job at all
+        self._bloom_table = self._bloom_latest()
         self._round_tmp: list[DataFrame] = []
         try:
             with self._latency_mode():
@@ -875,9 +855,6 @@ class CrawlEngine:
             for df in self._round_tmp:
                 df.unpersist()
             self._round_tmp = []
-            if self._bloom_bc is not None:
-                self._bloom_bc.destroy()
-            self._bloom_bc = None
             self._bloom_table = None
         # compaction is corpus-sized — always compiled under AQE,
         # outside the latency scope (round frames are already released)
@@ -1040,47 +1017,24 @@ class CrawlEngine:
         might be in the visited Bloom. Definite negatives (the vast
         majority of discovered links) skip the exact anti-join shuffle.
 
-        broadcast mode probes executor-side against the per-round
-        broadcast of the bitmaps; cogroup mode never materializes the
-        filter whole anywhere — probe rows cogroup with the committed
-        ``bloom_parts`` table on partition id (the 4096-partition
-        production shape, where the full filter is GBs and must not
-        transit the driver).
+        The filter is never materialized whole anywhere — probe rows
+        cogroup with the committed ``bloom_parts`` table on partition
+        id (the 4096-partition production shape, where the full filter
+        is GBs and must not transit the driver).
 
-        Round-6 adaptive skip: the prefilter's only job is to spare the
-        EXACT membership check a scan of the visited table. Below the
-        same on-disk floor that gates bucket pruning
-        (``prune_min_bytes``) that scan is already trivial, while the
-        probe itself costs a Python-worker stage per call site (guide
-        §4) — so small corpora skip straight to the exact check.
-        ``_maybe=True`` is the probe's no-information answer (a Bloom
-        filter has no false negatives): downstream results are
-        identical, rows just take the exact-check path. The Bloom
-        DELTA maintenance below is unaffected — the filter stays
-        current for the rounds where the corpus outgrows the floor."""
-        if getattr(self, "_bloom_probe_skip", False):
+        Until a compaction finds ``visited`` at ``prune_min_bytes`` no
+        filter exists: the prefilter's only job is to spare the EXACT
+        membership check a scan of the visited table, and below that
+        floor the scan is already trivial while the probe costs a
+        Python-worker stage per call site. ``_maybe=True`` is the
+        probe's no-information answer (a Bloom filter has no false
+        negatives): downstream results are identical, rows just take
+        the exact-check path."""
+        if self._bloom_table is None:
             return df.withColumn("_maybe", F.lit(True))
-        P, bits, k = (self._bloom.num_partitions, self._bloom.bits,
-                      self._bloom.k)
+        bits, k = BITS_PER_PARTITION, NUM_HASHES
         out_schema = StructType(list(df.schema.fields)
                                 + [StructField("_maybe", BooleanType())])
-        if self._bloom_bc is not None:
-            parts = self._bloom_bc
-
-            def probe(batches):
-                bloom = PartitionedBloom(P, bits, k)
-                bloom.parts = parts.value
-                for pdf in batches:
-                    if len(pdf):
-                        yield pdf.assign(
-                            _maybe=bloom.might_contain(
-                                pdf["url_hash"].to_numpy()))
-                    else:
-                        yield pdf.assign(_maybe=pd.Series(dtype=bool))
-
-            return df.mapInPandas(probe, schema=out_schema)
-        if self._bloom_table is None:
-            return df.withColumn("_maybe", F.lit(False))
         cols = list(df.columns)
 
         def check_fn(key, pdf, bdf):
@@ -1088,16 +1042,50 @@ class CrawlEngine:
             if not len(pdf):
                 return pdf.assign(_maybe=pd.Series(dtype=bool))
             if not len(bdf):
+                # the filter is complete: a partition with no bitmap
+                # holds no visited URL
                 return pdf.assign(_maybe=False)
             part = np.frombuffer(bdf.iloc[0]["bits"], dtype=np.uint8)
             return pdf.assign(_maybe=check_hashes(
                 pdf["url_hash"].to_numpy(), part, bits, k))
 
         probe = df.withColumn(
-            "_pid", F.pmod(F.col("url_hash"), F.lit(P)).cast("int"))
+            "_pid", F.pmod(F.col("url_hash"),
+                           F.lit(self.cfg.bloom_num_partitions)).cast("int"))
         return (probe.groupBy("_pid")
                 .cogroup(self._bloom_table.select("pid", "bits").groupBy("pid"))
                 .applyInPandas(check_fn, schema=out_schema))
+
+    def _bloom_bitmaps(self, keys: DataFrame) -> DataFrame:
+        """``(pid, bits)``: one bitmap per Bloom partition holding the
+        probe bits of every ``url_hash`` in ``keys``, built
+        executor-side — the per-round delta and the one-pass build at
+        compaction. The driver never collects url_hashes (at 10^6-10^7
+        visited per round that collect is a choke point); the output is
+        bounded by P × bits/8 regardless of row count."""
+        bits, k = BITS_PER_PARTITION, NUM_HASHES
+        P = self.cfg.bloom_num_partitions
+
+        def build(key, pdf):
+            return pd.DataFrame([{
+                "pid": int(key[0]),
+                "bits": bitmap_delta(pdf["url_hash"].to_numpy(), bits, k)
+                .tobytes()}])
+
+        # explicit width on the pid exchange: the bitmap stage is
+        # CPU-bound Python over a small-BYTES shuffle (16 B/row), so
+        # byte-based AQE coalescing (advisory=16m, parallelismFirst=
+        # false) collapses a 10^6-row delta build to 1-2 tasks
+        # — measured 0.64 → 0.91-1.05 s at 1e6 rows (round-5 AQE
+        # bisect). A user repartition with an explicit count is exempt
+        # from coalescing and already satisfies the groupBy's
+        # distribution, so this pins parallelism without adding an
+        # exchange.
+        return (keys.select(F.pmod(F.col("url_hash"), F.lit(P))
+                            .cast("int").alias("pid"), "url_hash")
+                .repartition(min(P, self.cfg.shuffle_partitions), "pid")
+                .groupBy("pid")
+                .applyInPandas(build, schema="pid int, bits binary"))
 
     def _select_pops(self, budgets: dict[str, int]) -> DataFrame | None:
         """Pop cutoff with candidate-prefix escalation. Returns the
@@ -1216,20 +1204,13 @@ class CrawlEngine:
         # 43.8 s (scripts/eagerflush_ab_out.json).
         pool = self._eager_pool
         staged_futs: list[tuple[str, object]] = []
-        pre_staged: dict[str, list[str]] = {}
 
         def stage(table: str, df: DataFrame):
             staged_futs.append(
                 (table, pool.submit(self.catalog.stage, table, df, rno)))
 
-        def stage_rows(table: str, rows: list[dict], schema) -> None:
-            # driver-resident rows: direct pyarrow write, no Spark job
-            pre_staged.setdefault(table, []).append(
-                self.catalog.stage_rows(table, rows, schema, rno))
-
         def _flush_stages() -> dict[str, list[str]]:
-            staged: dict[str, list[str]] = {k: list(v)
-                                            for k, v in pre_staged.items()}
+            staged: dict[str, list[str]] = {}
             for t, fut in staged_futs:
                 staged.setdefault(t, []).append(fut.result())
             fetch_kick.result()
@@ -1423,90 +1404,40 @@ class CrawlEngine:
             F.lit(now).alias("last_crawled_at"), F.lit(rno).alias("round")))
         stage("refreshes", refreshes)
 
-        # ---- visited additions: every batch member + ext-skips
-        # (crawler.py:1168-1173, 1185-1187). Pop-time precedence is
-        # visited → excluded → extension (crawler.py:1163-1173): an
-        # excluded URL `continue`s BEFORE the extension check, so a
-        # URL that is both excluded and extension-suffixed is never
-        # marked visited (it may be re-pushed on rediscovery).
-        marks_visited = F.col("admissible") | (
-            F.col("f_ext") & ~F.col("f_visited") & ~F.col("f_excluded"))
-        new_visited = (
-            popped.filter(marks_visited)
-            .select("site", "url", "url_hash")
-            .withColumn("round", F.lit(rno)))
-        # no visited delta: crawl_log actions admitted/ext_skipped ARE
-        # marks_visited, and _visited_view derives these rows back from
-        # its post-floor delta dirs (round-5 write-merge); new_visited
-        # still feeds the Bloom delta below
+        # ---- Bloom delta, once the filter exists: every batch member
+        # + ext-skips (crawler.py:1168-1173, 1185-1187). Pop-time
+        # precedence is visited → excluded → extension
+        # (crawler.py:1163-1173): an excluded URL `continue`s BEFORE
+        # the extension check, so a URL that is both excluded and
+        # extension-suffixed is never marked visited (it may be
+        # re-pushed on rediscovery). No visited delta is staged:
+        # crawl_log actions admitted/ext_skipped ARE marks_visited, and
+        # _visited_view derives these rows back (round-5 write-merge).
+        prev = self._bloom_table
+        if prev is not None:
+            marks_visited = F.col("admissible") | (
+                F.col("f_ext") & ~F.col("f_visited") & ~F.col("f_excluded"))
+            delta_df = self._bloom_bitmaps(popped.filter(marks_visited))
+            # merge executor-side (broadcast join on the ≤P-row parts
+            # view); no bitmap ever reaches the driver
+            joined = (delta_df
+                      .join(F.broadcast(prev.select(
+                          "pid", F.col("bits").alias("pbits"))),
+                          "pid", "left"))
 
-        # ---- executor-side Bloom deltas (never collect url_hashes:
-        # at 10^6-10^7 visited/round that collect is a driver choke
-        # point; the per-partition bitmap deltas are bounded by
-        # P × bits/8 regardless of row count) ----
-        # Round-6: the delta depends ONLY on popped (via new_visited),
-        # so in broadcast mode its collect is submitted HERE — before
-        # the link-dedup/metrics plans are even built — and its job
-        # overlaps the round's fetch + link work instead of serializing
-        # with the metrics rollup at the barrier (guide §2.6: overlap
-        # independent jobs; concurrent first-materialization of the
-        # popped checkpoint is BlockManager-locked, the same safety the
-        # eager staged writes rely on).
-        bits, k = self._bloom.bits, self._bloom.k
-        P = self._bloom.num_partitions
+            def or_fn(batches):
+                for pdf in batches:
+                    out = []
+                    for row in pdf.itertuples(index=False):
+                        d = np.frombuffer(row.bits, dtype=np.uint8)
+                        if row.pbits is not None:
+                            d = d | np.frombuffer(row.pbits, dtype=np.uint8)
+                        out.append({"pid": row.pid, "bits": d.tobytes()})
+                    yield pd.DataFrame(out, columns=["pid", "bits"])
 
-        def build_delta(key, pdf):
-            return pd.DataFrame([{
-                "pid": int(key[0]),
-                "bits": bitmap_delta(pdf["url_hash"].to_numpy(), bits, k)
-                .tobytes()}])
-
-        # explicit width on the pid exchange: the bitmap stage is
-        # CPU-bound Python over a small-BYTES shuffle (16 B/row), so
-        # byte-based AQE coalescing (advisory=16m, parallelismFirst=
-        # false) collapses a 10^6-row round's delta build to 1-2 tasks
-        # — measured 0.64 → 0.91-1.05 s at 1e6 rows (round-5 AQE
-        # bisect). A user repartition with an explicit count is exempt
-        # from coalescing and already satisfies the groupBy's
-        # distribution, so this pins parallelism without adding an
-        # exchange.
-        delta_width = min(P, self.cfg.shuffle_partitions)
-        delta_df = (new_visited
-                    .select(F.pmod(F.col("url_hash"), F.lit(P))
-                            .cast("int").alias("pid"), "url_hash")
-                    .repartition(delta_width, "pid")
-                    .groupBy("pid")
-                    .applyInPandas(build_delta, schema="pid int, bits binary"))
-        fut_delta = None
-        if self.cfg.bloom_probe_mode == "broadcast":
-            fut_delta = pool.submit(delta_df.collect)
-        else:
-            # table mode: merge executor-side (broadcast join on the
-            # ≤P-row parts view); no bitmap ever reaches the driver
-            prev = self._bloom_table
-            if prev is not None:
-                joined = (delta_df.alias("d")
-                          .join(F.broadcast(prev.select(
-                              "pid", F.col("bits").alias("pbits"))),
-                              "pid", "left"))
-
-                def or_fn(batches):
-                    for pdf in batches:
-                        out = []
-                        for row in pdf.itertuples(index=False):
-                            d = np.frombuffer(row.bits, dtype=np.uint8)
-                            if row.pbits is not None:
-                                d = d | np.frombuffer(row.pbits,
-                                                      dtype=np.uint8)
-                            out.append({"pid": row.pid,
-                                        "bits": d.tobytes()})
-                        yield pd.DataFrame(out, columns=["pid", "bits"])
-
-                merged = joined.mapInPandas(or_fn,
-                                            schema="pid int, bits binary")
-            else:
-                merged = delta_df
-            stage("bloom_parts", merged.withColumn("round", F.lit(rno)))
+            stage("bloom_parts",
+                  joined.mapInPandas(or_fn, schema="pid int, bits binary")
+                  .withColumn("round", F.lit(rno)))
 
         # ---- metrics, adds-independent components (A2/A3) ----
         # Round-6: four of the five metrics components depend only on
@@ -1597,35 +1528,18 @@ class CrawlEngine:
                          .select("site", "action", "count")
                          .withColumn("round", F.lit(rno)))
 
-        # ---- barrier: metrics rollup + the early-submitted Bloom
-        # delta (broadcast mode; its job has been running since the
-        # visited section — by now it is usually done) ----
+        # ---- barrier: metrics rollup ----
         metrics_rows = fut_metrics.result() + pushed_counts.collect()
-        if fut_delta is not None:
-            delta_rows = fut_delta.result()
-            if delta_rows:
-                for r in delta_rows:
-                    self._bloom.or_delta(r["pid"], r["bits"])
-                import pyarrow as pa
-
-                stage_rows(
-                    "bloom_parts",
-                    [{"pid": int(r["pid"]),
-                      "bits": self._bloom.parts[int(r["pid"])].tobytes(),
-                      "round": rno} for r in delta_rows],
-                    pa.schema([("pid", pa.int32()), ("bits", pa.binary()),
-                               ("round", pa.int32())]))
-
         if metrics_rows:
-            import pyarrow as pa
-
-            stage_rows(
-                "metrics",
+            # driver-resident rows: direct pyarrow write, no Spark job
+            staged_futs.append(("metrics", pool.submit(
+                self.catalog.stage_rows, "metrics",
                 [{"site": r["site"], "action": r["action"],
                   "count": int(r["count"]), "round": rno}
                  for r in metrics_rows],
                 pa.schema([("site", pa.string()), ("action", pa.string()),
-                           ("count", pa.int64()), ("round", pa.int32())]))
+                           ("count", pa.int64()), ("round", pa.int32())]),
+                rno)))
         else:
             stage("metrics", metrics_head.unionByName(pushed_counts))
 
@@ -1688,7 +1602,9 @@ class CrawlEngine:
         adds before clearing pops keeps any crash point consistent.
         This is the ONLY place a corpus-sized window/aggregate runs —
         amortized over ``compact_every`` rounds, exactly like Iceberg's
-        rewrite_data_files maintenance job.
+        rewrite_data_files maintenance job. It is also where the visited
+        Bloom filter is created, once ``visited`` reaches
+        ``prune_min_bytes``.
 
         The snapshot WRITES run concurrently (every rewrite reads the
         pre-compaction manifest and destroys nothing — prepared dirs
@@ -1785,6 +1701,19 @@ class CrawlEngine:
                 meta={"visited_floor": self.catalog.committed_round})
         if bloom is not None:
             self.catalog.commit_compact("bloom_parts", done["bloom_parts"])
+        elif (visited is not None and self.catalog.table_bytes("visited")
+              >= self.cfg.prune_min_bytes):
+            # visited reached the probe floor: create the filter in one
+            # pass over the committed snapshot (an OR of per-key bits,
+            # so it equals the OR of every round's delta). The table's
+            # existence records the crossing, so a later compaction
+            # that shrinks visited keeps probing. A crash before this
+            # commit leaves no filter; the next compaction builds it.
+            self.catalog.compact(
+                "bloom_parts",
+                self._bloom_bitmaps(self.catalog.read("visited").select(
+                    url_hash_col(F.col("url")).alias("url_hash")))
+                .withColumn("round", F.lit(self.catalog.committed_round)))
 
     def _dedup_links(self, links: DataFrame, popped: DataFrame) -> DataFrame:
         """Push-time dedup (crawler.py:1205): drop links already visited

@@ -72,8 +72,8 @@ def get_spark(master: str | None = None, shuffle_partitions: int = 32,
         # action on this engine's plans and has never once fired
         # (QueryPlanningTracker: InjectRuntimeFilter 280-480 ms/action,
         # effective count 0, across every engine action and all 39
-        # declared queries — no might_contain anywhere). The engine
-        # builds its own Bloom/semi-join prefilters where a join is
+        # declared queries — no runtime Bloom filter in any plan). The
+        # engine builds its own Bloom/semi-join prefilters where a join is
         # selective (engine/bloom.py, _present_keys), so the rule is
         # pure per-action planning overhead at any scale — measured
         # 32.8 → 24.1 s interleaved on the bench crawl (round 6).

@@ -9,10 +9,16 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from meilisearchcrawler_spark.config import CrawlConfig
+from meilisearchcrawler_spark.engine.bloom import (
+    BITS_PER_PARTITION, NUM_HASHES, bitmap_delta,
+)
 from meilisearchcrawler_spark.engine.crawler import CrawlEngine
+from meilisearchcrawler_spark.functions.urls import url_hash_col
 from meilisearchcrawler_spark.fixtures.webgen import generate_web, write_parquet
 from meilisearchcrawler_spark.oracle.refcrawler import crawl_site
 
@@ -114,6 +120,8 @@ def test_ordering_equivalence_default_budget(spark, web, tmp_path):
     eng = _run_engine(spark, web, tmp_path / "cat",
                       CrawlConfig(round_budget=2, shuffle_partitions=4))
     _assert_equivalent(eng, oracle)
+    # visited never reaches the default probe floor: no filter is built
+    assert not eng.catalog.exists("bloom_parts")
 
 
 def test_ordering_equivalence_wide_budget(spark, web, tmp_path):
@@ -191,26 +199,60 @@ def test_many_sites_dimension_tables(spark, tmp_path):
     _assert_equivalent(eng, oracle)
 
 
+def _assert_bloom_exact(eng: CrawlEngine) -> None:
+    """The committed filter equals, bit for bit, a numpy filter built
+    from the final visited set: no round's visited URLs are missing."""
+    P = eng.cfg.bloom_num_partitions
+    hashes = np.array(
+        [r[0] for r in eng.visited().select(url_hash_col(F.col("url")))
+         .distinct().collect()], dtype=np.int64).astype(np.uint64)
+    pids = hashes % np.uint64(P)
+    want = {int(p): bitmap_delta(hashes[pids == p], BITS_PER_PARTITION,
+                                 NUM_HASHES).tobytes()
+            for p in np.unique(pids)}
+    got = {r["pid"]: bytes(r["bits"])
+           for r in eng._bloom_latest().collect()}
+    assert got == want, "committed Bloom filter differs from visited"
+
+
 def test_cogroup_bloom_mode(spark, web, tmp_path):
-    """bloom_probe_mode='cogroup' — the production probe shape where
-    the visited filter lives only in the bloom_parts table (no driver
-    copy, no whole-filter broadcast) — must stay exact-match, including
-    across a kill-resume (the bloom state rides the manifest commit)."""
+    """The visited filter lives only in the bloom_parts table (no
+    driver copy, no whole-filter broadcast). It is created by the first
+    compaction that finds visited at ``prune_min_bytes`` and merged by
+    every round after it. The crawl must stay exact-match across a
+    kill-resume (the filter rides the manifest commit), and the final
+    filter must cover every visited URL. Cases: (round budget,
+    compact_every, prune_min_bytes, rounds before the kill)."""
     fx, paths = web
-    oracle = {s["site"]: crawl_site(fx, s, batch_size=3) for s in fx.seeds}
-    root = tmp_path / "cat"
-    cfg = CrawlConfig(round_budget=3, shuffle_partitions=4,
-                      bloom_probe_mode="cogroup",
-                      # keep the cogroup PROBE path exercised at this
-                      # tiny web: the default prune floor would take the
-                      # round-6 exact-check shortcut instead
-                      prune_min_bytes=0)
-    eng1 = CrawlEngine(spark, str(root), paths["pages"], fx.seeds, fx.robots,
-                       cfg, initial_url_seen=fx.url_seen)
-    eng1.run(max_rounds=5)
-    eng2 = CrawlEngine(spark, str(root), paths["pages"], fx.seeds, fx.robots, cfg)
-    eng2.run(max_rounds=300)
-    _assert_equivalent(eng2, oracle)
+    for budget, compact_every, floor, kill in [
+            (3, 8, 0, 5),
+            # visited crosses a 1-byte floor at the first compaction,
+            # after rounds that kept no filter
+            (7, 4, 1, 4)]:
+        oracle = {s["site"]: crawl_site(fx, s, batch_size=budget)
+                  for s in fx.seeds}
+        root = tmp_path / f"cat_{budget}_{compact_every}"
+        cfg = CrawlConfig(round_budget=budget, shuffle_partitions=4,
+                          bloom_probe_mode="cogroup",
+                          compact_every=compact_every,
+                          prune_min_bytes=floor)
+        eng1 = CrawlEngine(spark, str(root), paths["pages"], fx.seeds,
+                           fx.robots, cfg, initial_url_seen=fx.url_seen)
+        for _ in range(kill):
+            eng1.run_round()
+            assert eng1.catalog.exists("bloom_parts") == (
+                eng1.round_no >= compact_every), (budget, eng1.round_no)
+        eng2 = CrawlEngine(spark, str(root), paths["pages"], fx.seeds,
+                           fx.robots, cfg)
+        eng2.run(max_rounds=300)
+        _assert_equivalent(eng2, oracle)
+        _assert_bloom_exact(eng2)
+
+
+def test_bloom_probe_mode_is_cogroup_only(spark, tmp_path):
+    with pytest.raises(ValueError, match="bloom_probe_mode"):
+        CrawlEngine(spark, str(tmp_path / "cat"), "", [], [],
+                    CrawlConfig(bloom_probe_mode="broadcast"))
 
 
 def test_politeness_budget_guarantee(spark, web, tmp_path):
