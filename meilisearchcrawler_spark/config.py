@@ -9,6 +9,7 @@ with Spark-native equivalents. See SURVEY.md §4 for the mapping.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import ClassVar
 
 # Reference: GLOBAL_EXCLUDE_PATTERNS, crawler.py:112-119. Substring
 # patterns applied to every site's URL admission (is_excluded,
@@ -87,10 +88,6 @@ class CrawlConfig:
     # stamps (crawler.py:1044,1054) for deterministic resume.
     round_seconds: float = 1.0
     shuffle_partitions: int = 32
-    # Salt factor for hot-host skew: hosts whose round quota exceeds
-    # this many rows get spread over multiple shuffle partitions.
-    host_partition_rows: int = 10_000
-    bloom_num_partitions: int = 64     # power of two (CrawlEngine checks)
     # The only value is "cogroup": the filter lives only as the
     # committed bloom_parts table, probes cogroup with it by pid and
     # deltas merge executor-side (4096 × ~3 MB never transits the
@@ -105,28 +102,13 @@ class CrawlConfig:
     # ``bucket = pmod(xxhash64(key), seen_buckets)`` and compaction
     # range-partitions + sorts by it, so the per-round membership reads
     # prune files via parquet min/max stats instead of scanning (the
-    # Iceberg bucket-transform partition spec). Production: 4096.
-    seen_buckets: int = 1024
-    # Ceiling (rows) for FORCING a broadcast hint on round-scoped key
-    # sets (admitted keys, discovered-link keys, membership results).
-    # The hint overrides Spark's size threshold, so an unguarded hint
-    # on a 10^7-link round would OOM the driver/executors; above this
-    # bound the join is left to Spark's own strategy (AQE still
-    # broadcasts at runtime if the actual size turns out small).
-    broadcast_key_rows: int = 4_000_000
+    # Iceberg bucket-transform partition spec). Production: 4096. A
+    # storage-layout constant, not a per-run knob; readable as
+    # ``cfg.seen_buckets``.
+    seen_buckets: ClassVar[int] = 1024
     # Adaptive pruning floor: collecting the round's bucket list costs
     # one small driver job, which only pays once the table is big
     # enough that file-skipping matters — below this on-disk size the
     # broadcast-filtered scan wins outright (AQE spirit). Tests force 0
     # to exercise the pruned path; production leaves the default.
     prune_min_bytes: int = 64 << 20
-    # Small-round latency mode: when a round's popped-row bound is at
-    # or below this, its barrier actions compile WITHOUT AQE so the
-    # ~12-exchange selection pipeline and the staged writes each run
-    # as ONE pipelined job instead of submitting every exchange as its
-    # own query stage (~0.3-0.5 s of scheduling apiece — measured 6 s
-    # of a 2k-URL round's 15 s wall at the frontier10m harness,
-    # scripts/profile_frontier_actions.py). Data-bound waves above the
-    # bound keep AQE (runtime coalescing + skew splitting matter
-    # there); compaction always runs under AQE. 0 disables.
-    latency_round_rows: int = 100_000

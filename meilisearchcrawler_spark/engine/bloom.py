@@ -4,8 +4,8 @@ The reference's URL-seen set is a SQLite table probed per URL
 (cache_db.py:17-29, crawler.py:1164). At 10^10 URLs a single bitmap at
 1% FPR is ~12 GB — unbroadcastable — so the engine shards it:
 ``partition = url_hash mod P`` selects one of P independent bitmaps
-(SURVEY.md §7 hard part 3; P=4096 × ~3 MB at full scale, P=64 in
-tests). Properties:
+(SURVEY.md §7 hard part 3; P=4096 × ~3 MB at full scale,
+``NUM_PARTITIONS`` = 64 here). Properties:
 
 * **pre-filter only, never authoritative**: a positive routes the
   candidate into the exact anti-join against the seen table; a negative
@@ -37,8 +37,11 @@ import numpy as np
 _MIX1 = np.uint64(0xFF51AFD7ED558CCD)
 _MIX2 = np.uint64(0xC4CEB9FE1A85EC53)
 
-# bits per partition bitmap (16 KB) and probe count; the partition
-# count is CrawlConfig.bloom_num_partitions
+# partition count, bits per partition bitmap (16 KB) and probe count.
+# The partition count is a power of two: Spark's signed
+# pmod(url_hash, P) then equals numpy's unsigned url_hash % P
+# (2^64 ≡ 0 mod P), so executor and test builds agree on every pid.
+NUM_PARTITIONS = 64
 BITS_PER_PARTITION = 1 << 17
 NUM_HASHES = 7
 

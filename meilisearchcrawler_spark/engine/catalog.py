@@ -281,6 +281,15 @@ class CheckpointCatalog:
         # the superseded dirs are gone: so must be their read handles
         self._df_cache.pop(table, None)
 
+    def drop(self, table: str) -> None:
+        """Atomically unpublish ``table``, then delete its dirs (a
+        crash in between leaves only orphans)."""
+        old = self.manifest["tables"].pop(table, [])
+        self._commit_manifest()
+        for r in old:
+            shutil.rmtree(os.path.join(self.root, r), ignore_errors=True)
+        self._df_cache.pop(table, None)
+
     def blob_dir(self, name: str) -> str:
         path = os.path.join(self.root, "blobs", name)
         os.makedirs(path, exist_ok=True)

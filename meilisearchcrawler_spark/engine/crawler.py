@@ -102,7 +102,9 @@ from ..functions.urls import (
     normalize_url,
     url_hash_col,
 )
-from .bloom import BITS_PER_PARTITION, NUM_HASHES, bitmap_delta, check_hashes
+from .bloom import (
+    BITS_PER_PARTITION, NUM_HASHES, NUM_PARTITIONS, bitmap_delta, check_hashes,
+)
 from .catalog import CheckpointCatalog
 from .pagestore import load_store
 
@@ -372,6 +374,19 @@ _HIST_RANKS = tuple(64 * 8 ** i for i in range(10))  # 64 … ~8.6e9
 # behavior; the round-5 A/B is recorded in scripts/compact_ab_out.json).
 _COMPACT_POOL_WORKERS = 4
 
+# Salt factor for hot-host skew: the fetch repartition hashes
+# (host, counter % _HOST_SALT_ROWS), so a host with more rows than this
+# in one round spreads over several shuffle partitions.
+_HOST_SALT_ROWS = 10_000
+
+# Row-count ceiling for forcing a broadcast hint (see CrawlEngine._bc).
+_BROADCAST_KEY_ROWS = 4_000_000
+
+# Popped-row bound at or below which a round compiles without AQE (see
+# CrawlEngine._latency_mode; the per-action profile behind it is
+# recorded in scripts/frontier_actions_out.json).
+_LATENCY_ROUND_ROWS = 100_000
+
 
 class CrawlEngine:
     def __init__(self, spark: SparkSession, catalog_root: str,
@@ -386,12 +401,6 @@ class CrawlEngine:
         if self.cfg.bloom_probe_mode != "cogroup":
             raise ValueError("bloom_probe_mode must be 'cogroup', got "
                              f"{self.cfg.bloom_probe_mode!r}")
-        # power of two: Spark's signed pmod(h, P) then equals numpy's
-        # unsigned h % P (2^64 ≡ 0 mod P)
-        P = self.cfg.bloom_num_partitions
-        if P <= 0 or P & (P - 1):
-            raise ValueError(f"bloom_num_partitions must be a power of two, "
-                             f"got {P}")
         self.catalog = CheckpointCatalog(spark, catalog_root)
         self.pages_path = pages_path
         self.seeds = {s["site"]: s for s in seeds}
@@ -443,6 +452,14 @@ class CrawlEngine:
         if state.get("sites"):
             self.round_no = int(state["round"])
             self.sites = {k: SiteState(**v) for k, v in state["sites"].items()}
+            # a filter without ``bloom_round`` was not built over the
+            # whole visited snapshot by _compact (older checkpoints
+            # staged bare per-round deltas below the probe floor), so
+            # it may miss visited URLs: drop it, and the next
+            # compaction at the floor rebuilds it
+            if (self.catalog.exists("bloom_parts")
+                    and "bloom_round" not in self.catalog.meta):
+                self.catalog.drop("bloom_parts")
             return
         self.round_no = 0
         self.sites = {name: SiteState(url_counter=1, frontier_rows=1)
@@ -726,7 +743,7 @@ class CrawlEngine:
         and never globally distinct'd; the result is bounded by the
         key count. Callers anti/semi-join the (small) result back.
         ``est_rows`` is the caller's bound on the key-set size; above
-        ``broadcast_key_rows`` the forced hint is dropped (see
+        :data:`_BROADCAST_KEY_ROWS` the forced hint is dropped (see
         :meth:`_bc`)."""
         return (big.join(self._bc(keys.select(*cols).distinct(), est_rows),
                          cols, "left_semi")
@@ -876,17 +893,16 @@ class CrawlEngine:
         deep (the top-K window, the Bloom cogroup, admission joins);
         under AQE every exchange is submitted as its own query
         stage — ~0.3-0.5 s of scheduling latency apiece, ~6 s of a
-        2k-URL round's 15 s wall at the frontier10m harness (profiled:
-        scripts/profile_frontier_actions.py). A static plan pipelines
-        them into one job per action. Rounds whose popped-row bound
-        exceeds ``latency_round_rows`` are data-bound — they keep AQE
-        (runtime coalescing + skew splitting outweigh submission
-        latency), as does compaction (corpus-sized, always outside
+        2k-URL round's 15 s wall at the frontier10m harness (profile
+        recorded in scripts/frontier_actions_out.json). A static plan
+        pipelines them into one job per action. Rounds whose popped-row
+        bound exceeds :data:`_LATENCY_ROUND_ROWS` are data-bound — they
+        keep AQE (runtime coalescing + skew splitting outweigh
+        submission latency), as does compaction (corpus-sized, always outside
         this scope). Shuffle width drops to ≤8: a latency round's
         frames hold at most ~10^5 rows, and 8 wide static exchanges
         beat 32 near-empty tasks per stage."""
-        thr = self.cfg.latency_round_rows
-        if not thr or self._pop_bound > thr:
+        if self._pop_bound > _LATENCY_ROUND_ROWS:
             yield
             return
         conf = self.spark.conf
@@ -921,11 +937,11 @@ class CrawlEngine:
         """Broadcast hint with a size guard (round-4 advisor item): the
         hint overrides Spark's size threshold, so it is only forced when
         the caller's ROW-COUNT BOUND for the frame stays under
-        ``broadcast_key_rows``. Above the bound the join falls back to
+        :data:`_BROADCAST_KEY_ROWS`. Above the bound the join falls back to
         Spark's own strategy — AQE still converts it to a broadcast at
         runtime when the actual payload is small, and the shuffle-join
         fallback is the memory-safe shape for genuinely huge rounds."""
-        if est_rows is not None and est_rows > self.cfg.broadcast_key_rows:
+        if est_rows is not None and est_rows > _BROADCAST_KEY_ROWS:
             return df
         return F.broadcast(df)
 
@@ -1051,7 +1067,7 @@ class CrawlEngine:
 
         probe = df.withColumn(
             "_pid", F.pmod(F.col("url_hash"),
-                           F.lit(self.cfg.bloom_num_partitions)).cast("int"))
+                           F.lit(NUM_PARTITIONS)).cast("int"))
         return (probe.groupBy("_pid")
                 .cogroup(self._bloom_table.select("pid", "bits").groupBy("pid"))
                 .applyInPandas(check_fn, schema=out_schema))
@@ -1063,8 +1079,7 @@ class CrawlEngine:
         compaction. The driver never collects url_hashes (at 10^6-10^7
         visited per round that collect is a choke point); the output is
         bounded by P × bits/8 regardless of row count."""
-        bits, k = BITS_PER_PARTITION, NUM_HASHES
-        P = self.cfg.bloom_num_partitions
+        bits, k, P = BITS_PER_PARTITION, NUM_HASHES, NUM_PARTITIONS
 
         def build(key, pdf):
             return pd.DataFrame([{
@@ -1251,7 +1266,7 @@ class CrawlEngine:
                                     F.lit(None).cast("string")))
 
         # salted host-hash repartition → fetch UDF (hot-host skew guard)
-        salt = (F.col("counter") % F.lit(max(cfg.host_partition_rows, 1))).cast("long")
+        salt = (F.col("counter") % F.lit(_HOST_SALT_ROWS)).cast("long")
         fetched = self._cut(
             admitted.select("site", "url", "host", "depth", "counter",
                             "pos_in_round", "cached_etag",
@@ -1496,10 +1511,12 @@ class CrawlEngine:
                     (F.col("depth") + 1).alias("link_depth"),
                     F.posexplode("links").alias("link_pos", "link_url")))
         new_links = self._dedup_links(links, popped)
+        deduped = None
         if cfg.max_queue_size is not None:
-            # the cap path evaluates new_links twice (per-page
-            # rollup + kept rows) — cache the dedup subtree
-            new_links = new_links.persist()
+            # the cap path evaluates the dedup subtree twice (per-page
+            # rollup + kept rows) — cache it
+            deduped = new_links.persist()
+            new_links = self._apply_queue_cap(deduped, popped)
 
         # counter assignment in insertion order (crawler.py:1206-1207);
         # per-site counter bases join in as broadcast data (O(1) plan)
@@ -1511,10 +1528,8 @@ class CrawlEngine:
                         F.col("host"), F.col("link_depth").alias("depth"),
                         (F.coalesce(F.col("_base"), F.lit(0))
                          + F.col("_idx")).cast("long").alias("counter"))
-                .withColumn("bucket", bucket_col(F.col("url"), nb)))
-        if cfg.max_queue_size is not None:
-            adds = self._apply_queue_cap(adds, new_links, popped)
-        adds = adds.persist()
+                .withColumn("bucket", bucket_col(F.col("url"), nb))
+                .persist())
         stage("frontier_adds", adds)
         # no frontier_pops delta: crawl_log (staged above) carries
         # site/counter/round for every popped row, and _pops_view reads
@@ -1530,18 +1545,16 @@ class CrawlEngine:
 
         # ---- barrier: metrics rollup ----
         metrics_rows = fut_metrics.result() + pushed_counts.collect()
-        if metrics_rows:
-            # driver-resident rows: direct pyarrow write, no Spark job
-            staged_futs.append(("metrics", pool.submit(
-                self.catalog.stage_rows, "metrics",
-                [{"site": r["site"], "action": r["action"],
-                  "count": int(r["count"]), "round": rno}
-                 for r in metrics_rows],
-                pa.schema([("site", pa.string()), ("action", pa.string()),
-                           ("count", pa.int64()), ("round", pa.int32())]),
-                rno)))
-        else:
-            stage("metrics", metrics_head.unionByName(pushed_counts))
+        # driver-resident rows: direct pyarrow write, no Spark job (an
+        # empty round writes an empty file with the schema)
+        staged_futs.append(("metrics", pool.submit(
+            self.catalog.stage_rows, "metrics",
+            [{"site": r["site"], "action": r["action"],
+              "count": int(r["count"]), "round": rno}
+             for r in metrics_rows],
+            pa.schema([("site", pa.string()), ("action", pa.string()),
+                       ("count", pa.int64()), ("round", pa.int32())]),
+            rno)))
 
         # ---- driver state ----
         per_site_fetch = {}
@@ -1578,8 +1591,8 @@ class CrawlEngine:
         indexed.unpersist()
         intra304.unpersist()
         adds.unpersist()
-        if cfg.max_queue_size is not None:
-            new_links.unpersist()
+        if deduped is not None:
+            deduped.unpersist()
         return any_pop
 
     def _bucket_layout(self, df: DataFrame, order_key: str) -> DataFrame:
@@ -1707,13 +1720,17 @@ class CrawlEngine:
             # pass over the committed snapshot (an OR of per-key bits,
             # so it equals the OR of every round's delta). The table's
             # existence records the crossing, so a later compaction
-            # that shrinks visited keeps probing. A crash before this
-            # commit leaves no filter; the next compaction builds it.
+            # that shrinks visited keeps probing; ``bloom_round`` in the
+            # same commit marks it as built here (see
+            # _restore_or_init). A crash before this commit leaves no
+            # filter; the next compaction builds it.
+            rno = self.catalog.committed_round
             self.catalog.compact(
                 "bloom_parts",
                 self._bloom_bitmaps(self.catalog.read("visited").select(
                     url_hash_col(F.col("url")).alias("url_hash")))
-                .withColumn("round", F.lit(self.catalog.committed_round)))
+                .withColumn("round", F.lit(rno)),
+                meta={"bloom_round": rno})
 
     def _dedup_links(self, links: DataFrame, popped: DataFrame) -> DataFrame:
         """Push-time dedup (crawler.py:1205): drop links already visited
@@ -1825,28 +1842,30 @@ class CrawlEngine:
                                ["site", "link_url"], "left_anti")
         return links
 
-    def _apply_queue_cap(self, adds: DataFrame, new_links: DataFrame,
+    def _apply_queue_cap(self, new_links: DataFrame,
                          popped: DataFrame) -> DataFrame:
         """MAX_QUEUE_SIZE gate (crawler.py:1203): a page's links are
         pushed only if the frontier is under the cap at that page's
         turn. Sequential recurrence over per-page counts — tiny
-        driver-side array, only when a cap is configured."""
+        driver-side array, only when a cap is configured. Returns the
+        ``new_links`` rows of the allowed pages."""
         cap = self.cfg.max_queue_size
         live = self._live_frontier()
         # three independent tiny rollups — overlap their job overhead
-        with ThreadPoolExecutor(max_workers=3) as ex:
-            fut_pop = ex.submit(
-                popped.groupBy("site").agg(F.count("*").alias("n")).collect)
-            fut_live = (ex.submit(
-                live.groupBy("site").agg(F.count("*").alias("n")).collect)
-                if live is not None else None)
-            fut_pp = ex.submit(
-                new_links.groupBy("site", "pos_in_round")
-                .agg(F.count("*").alias("n")).collect)
-            popped_n = {r["site"]: r["n"] for r in fut_pop.result()}
-            live_n = ({r["site"]: r["n"] for r in fut_live.result()}
-                      if fut_live is not None else {})
-            per_page = fut_pp.result()
+        # on the engine pool
+        pool = self._eager_pool
+        fut_pop = pool.submit(
+            popped.groupBy("site").agg(F.count("*").alias("n")).collect)
+        fut_live = (pool.submit(
+            live.groupBy("site").agg(F.count("*").alias("n")).collect)
+            if live is not None else None)
+        fut_pp = pool.submit(
+            new_links.groupBy("site", "pos_in_round")
+            .agg(F.count("*").alias("n")).collect)
+        popped_n = {r["site"]: r["n"] for r in fut_pop.result()}
+        live_n = ({r["site"]: r["n"] for r in fut_live.result()}
+                  if fut_live is not None else {})
+        per_page = fut_pp.result()
         by_site: dict[str, list] = {}
         for r in sorted(per_page, key=lambda r: (r["site"], r["pos_in_round"])):
             by_site.setdefault(r["site"], []).append((r["pos_in_round"], r["n"]))
@@ -1858,19 +1877,10 @@ class CrawlEngine:
                     allowed.append((site, pos))
                     size += n
         if not allowed:
-            return adds.limit(0)
+            return new_links.limit(0)
         allow_df = self.spark.createDataFrame(
             allowed, schema="site string, pos_in_round int")
-        kept = new_links.join(allow_df, ["site", "pos_in_round"], "left_semi")
-        wcnt = Window.partitionBy("site").orderBy("pos_in_round", "link_pos")
-        kept = kept.withColumn("_idx", F.row_number().over(wcnt) - 1)
-        return (kept.join(F.broadcast(self._counter_base_df()), "site", "left")
-                .select("site", F.col("link_url").alias("url"), "host",
-                        F.col("link_depth").alias("depth"),
-                        (F.coalesce(F.col("_base"), F.lit(0))
-                         + F.col("_idx")).cast("long").alias("counter"))
-                .withColumn("bucket", bucket_col(F.col("url"),
-                                                 self.cfg.seen_buckets)))
+        return new_links.join(allow_df, ["site", "pos_in_round"], "left_semi")
 
 
 def _local_dim(spark: SparkSession, schema: str, **cols: list) -> DataFrame:

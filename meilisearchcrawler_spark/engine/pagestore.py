@@ -51,7 +51,6 @@ class LazyPageStore:
             for u in chunk.to_pylist():
                 self._idx[u] = pos
                 pos += 1
-        self._rows: dict[int, dict] = {}
 
     @staticmethod
     def _feather_twin(path: str) -> str | None:
@@ -63,11 +62,7 @@ class LazyPageStore:
         i = self._idx.get(url)
         if i is None:
             return None
-        row = self._rows.get(i)
-        if row is None:
-            row = {name: col[i].as_py() for name, col in self._cols.items()}
-            self._rows[i] = row
-        return row
+        return {name: col[i].as_py() for name, col in self._cols.items()}
 
 
 _CACHE: dict[str, LazyPageStore] = {}

@@ -14,13 +14,15 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
-_SHIPPED: set[int] = set()
+# keyed on the application id: the ``id()`` of a stopped context can
+# be reused by the next context object, an application id never is
+_SHIPPED: set[str] = set()
 
 
 def ship_package(spark: SparkSession) -> None:
     """Zip ``meilisearchcrawler_spark`` and addPyFile it (idempotent per
-    session)."""
-    key = id(spark.sparkContext)
+    Spark application)."""
+    key = spark.sparkContext.applicationId
     if key in _SHIPPED:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from meilisearchcrawler_spark.config import CrawlConfig
 from meilisearchcrawler_spark.engine.bloom import (
-    BITS_PER_PARTITION, NUM_HASHES, bitmap_delta,
+    BITS_PER_PARTITION, NUM_HASHES, NUM_PARTITIONS, bitmap_delta,
 )
 from meilisearchcrawler_spark.engine.crawler import CrawlEngine
 from meilisearchcrawler_spark.functions.urls import url_hash_col
@@ -202,7 +202,7 @@ def test_many_sites_dimension_tables(spark, tmp_path):
 def _assert_bloom_exact(eng: CrawlEngine) -> None:
     """The committed filter equals, bit for bit, a numpy filter built
     from the final visited set: no round's visited URLs are missing."""
-    P = eng.cfg.bloom_num_partitions
+    P = NUM_PARTITIONS
     hashes = np.array(
         [r[0] for r in eng.visited().select(url_hash_col(F.col("url")))
          .distinct().collect()], dtype=np.int64).astype(np.uint64)
@@ -247,6 +247,38 @@ def test_cogroup_bloom_mode(spark, web, tmp_path):
         eng2.run(max_rounds=300)
         _assert_equivalent(eng2, oracle)
         _assert_bloom_exact(eng2)
+
+
+def test_resume_drops_filter_not_built_at_compaction(spark, web, tmp_path):
+    """A committed ``bloom_parts`` that no compaction built (no
+    ``bloom_round`` in the manifest meta) may miss visited URLs, as the
+    bare per-round deltas of older checkpoints did. Resume must drop it
+    instead of probing it: here it holds only the last round's visited
+    URLs, so probing it would re-admit earlier rounds' URLs."""
+    fx, paths = web
+    oracle = {s["site"]: crawl_site(fx, s, batch_size=7) for s in fx.seeds}
+    root = tmp_path / "cat"
+    cfg = CrawlConfig(round_budget=7, shuffle_partitions=4, compact_every=4)
+    eng1 = CrawlEngine(spark, str(root), paths["pages"], fx.seeds,
+                       fx.robots, cfg, initial_url_seen=fx.url_seen)
+    eng1.run(max_rounds=3)
+    cat = eng1.catalog
+    rno = cat.committed_round
+    last = (cat.read("crawl_log")
+            .filter((F.col("round") == rno)
+                    & F.col("action").isin("admitted", "ext_skipped"))
+            .select(url_hash_col(F.col("url")).alias("url_hash")))
+    rel = cat.stage("bloom_parts", eng1._bloom_bitmaps(last)
+                    .withColumn("round", F.lit(rno)), rno)
+    cat.commit_round(rno, {"bloom_parts": [rel]}, cat.state)
+    assert "bloom_round" not in cat.meta
+    eng2 = CrawlEngine(spark, str(root), paths["pages"], fx.seeds,
+                       fx.robots, cfg)
+    eng2.run(max_rounds=300)
+    _assert_equivalent(eng2, oracle)
+    # visited never reaches the default floor, so nothing rebuilds it
+    assert not eng2.catalog.exists("bloom_parts")
+    assert not os.listdir(root / "bloom_parts")
 
 
 def test_bloom_probe_mode_is_cogroup_only(spark, tmp_path):

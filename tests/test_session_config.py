@@ -62,3 +62,28 @@ def test_aqe_byte_based_coalescing_pinned():
     assert cfgs.get(
         "spark.sql.adaptive.advisoryPartitionSizeInBytes") == "16m"
     assert cfgs.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_package_shipped_once_per_application(monkeypatch):
+    """A context object's ``id()`` can be reused after it stops; the
+    shipped-package set must key on the application id so a new
+    application always gets the package zip."""
+    import os
+    from types import SimpleNamespace
+
+    from meilisearchcrawler_spark import session
+
+    monkeypatch.setattr(session, "_SHIPPED", set())
+    shipped: list[str] = []
+    sc = SimpleNamespace(applicationId="app-1", addPyFile=shipped.append)
+    fake = SimpleNamespace(sparkContext=sc)
+    try:
+        session.ship_package(fake)
+        session.ship_package(fake)
+        assert len(shipped) == 1
+        sc.applicationId = "app-2"  # same context object, same id()
+        session.ship_package(fake)
+        assert len(shipped) == 2
+    finally:
+        for path in shipped:
+            os.remove(path)
