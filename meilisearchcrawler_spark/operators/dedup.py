@@ -6,25 +6,23 @@ suppression (crawler.py:944,1034-1039, F10) and merge-side URL dedup
 ladder, so this module adds the standard near-dup family on top:
 
 * :func:`exact_dedup_groups` / :func:`exact_dedup` — hash-groupBy (F10 at scale)
-* :func:`minhash_signatures` + :func:`lsh_candidate_pairs` — MinHash+LSH
-* :func:`ngram_jaccard_pairs` — exact Jaccard verification of LSH candidates
+* :func:`shingle_sets` → :func:`minhash_signatures` →
+  :func:`lsh_candidate_pairs` → :func:`ngram_jaccard_pairs` — MinHash,
+  banded LSH and exact Jaccard verification, all from one shingle frame
 * :func:`simhash` — bitwise majority fingerprint
 
 Scale notes (100 TB / 1000 executors):
 
-* every op here is a single hash-shuffle on a high-cardinality key
-  (``content_hash``, ``(shingle)``, ``(band, band_sig)``) — no skew
-  beyond genuinely duplicated content; a pathological all-equal corpus
-  is handled by the two-level aggregation Spark already does
-  (partial ``min``/``count`` map-side).
-* MinHash avoids a UDF entirely: shingles come from ``F.explode``,
-  hashes from ``F.md5``/``F.xxhash64`` (JVM), per-(doc, band) ``min``
-  is a partial aggregate. Signature width is a column count, not a
-  shuffle count.
-* LSH self-join joins on ``(band_id, band_sig)`` — Catalyst hash-joins
-  it; bucket sizes are the classic LSH tradeoff and the
-  ``max_bucket_size`` guard drops degenerate buckets (boilerplate
-  pages) instead of letting one reducer own n² pair expansion.
+* every op hash-shuffles on a high-cardinality key (``content_hash``,
+  doc id, ``(band, band_sig)``); only duplicated content skews it, and
+  map-side partial ``min``/``count`` absorbs that.
+* a narrow input (fewer partitions than cores, e.g. one small file) is
+  spread by doc id first (:func:`spread_by_id`) so per-document kernels
+  use every core, and ``groupBy(id)`` reuses that exchange; a wide
+  input keeps its plan, so raw text is not reshuffled at scale.
+* no UDF: shingles via ``F.transform``, md5 in the JVM, partial ``min``.
+* LSH groups each ``(band_id, band_sig)`` bucket on one exchange (no
+  self-join); ``max_bucket_size`` drops boilerplate buckets first.
 """
 
 from __future__ import annotations
@@ -79,131 +77,128 @@ def words_of(text: Column) -> Column:
     return F.split(F.lower(F.regexp_replace(text, r"\s+", " ")), " ")
 
 
-def shingles_from_words(words: Column, n: int = 3) -> Column:
-    """Word n-gram shingle array (distinct, order-free). ``words`` MUST
-    be a materialized attribute (project it in a prior select): inside
-    a higher-order-function lambda Catalyst does not CSE the split, so
-    passing the raw split expression re-tokenizes the document once per
-    element access (measured 30× on the shingle explode)."""
-    num = F.size(words) - F.lit(n - 1)
-    idx = F.sequence(F.lit(0), num - F.lit(1))
-    gram = lambda i: F.concat_ws(" ", *[F.element_at(words, i + F.lit(off + 1)) for off in range(n)])  # noqa: E731
-    grams = F.array_distinct(F.transform(idx, gram))
+def spread_by_id(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """``df`` hash-partitioned by ``id_col`` at the session's core width
+    when its plan has fewer partitions, else ``df`` itself. The explicit
+    count keeps AQE from coalescing the exchange back to one partition.
+    A plan with an exchange (adaptive) knows its width only once it
+    runs, so it is left as it is. The check plans ``df`` and builds its
+    RDD without running a job; a reused ``df`` pays that once."""
+    width = df.sparkSession.sparkContext.defaultParallelism
+    plan = df._jdf.queryExecution().executedPlan()
+    if (plan.nodeName() == "AdaptiveSparkPlan"
+            or plan.execute().getNumPartitions() >= width):
+        return df
+    return df.repartition(width, F.col(id_col))
+
+
+def shingles_from_words(words: str, n: int = 3) -> Column:
+    """Word n-gram shingle array (distinct, order-free) of the word-array
+    column named ``words``, which MUST be a materialized attribute
+    (projected in a prior select): inside a higher-order-function lambda
+    Catalyst does not CSE the split, so passing the raw split expression
+    re-tokenizes the document once per element access (measured 30× on
+    the shingle explode).
+
+    Explode a projected shingle column with ``explode_outer`` + an
+    ``isNotNull`` filter: for ``explode(attribute)`` Catalyst infers a
+    ``size(sh) > 0`` filter and pushes it below the projection with this
+    expression, split included, inlined (measured ~11× slower on q19)."""
+    # one SQL string: built from Column calls, the same expression costs
+    # dozens of driver round trips per query
+    gram = ", ".join(f"element_at({words}, i + {off + 1})" for off in range(n))
+    num = f"size({words}) - {n - 1}"
     # sequence(0, -1) would *descend*; short docs get an empty set
-    return F.when(num <= 0, F.array().cast("array<string>")).otherwise(grams)
+    return F.expr(f"CASE WHEN {num} <= 0 THEN CAST(array() AS array<string>) "
+                  f"ELSE array_distinct(transform(sequence(0, {num} - 1), "
+                  f"i -> concat_ws(' ', {gram}))) END")
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Convenience form over raw text — fine for single-use columns;
-    hot paths should pre-project :func:`words_of` (see above)."""
-    return shingles_from_words(words_of(text), n)
+def shingle_sets(df: DataFrame, text_col: str = "text",
+                 id_col: str = "doc_id", shingle_n: int = 3) -> DataFrame:
+    """``(id, sh)``: each document's distinct word ``shingle_n``-gram
+    set, spread by id. A query tokenizes once: signatures, banding and
+    Jaccard verification all derive from this frame."""
+    return (spread_by_id(df, id_col)
+            .select(F.col(id_col), words_of(F.col(text_col)).alias("_w"))
+            .select(id_col, shingles_from_words("_w", shingle_n).alias("sh")))
 
 
-def minhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", num_hashes: int = 8,
-                       shingle_n: int = 3) -> DataFrame:
-    """MinHash signature per document: ONE md5 per shingle, sliced into
-    ``num_hashes`` disjoint hex windows, min per window.
+def minhash_signatures(sets_: DataFrame, id_col: str = "doc_id",
+                       num_hashes: int = 8) -> DataFrame:
+    """MinHash signature per :func:`shingle_sets` row with a non-empty
+    set: ONE md5 per shingle, sliced into ``num_hashes`` disjoint hex
+    windows, min per window.
 
     One hash invocation instead of ``num_hashes`` salted ones (measured
     ~2× on the LSH bench); slices of a single md5 are independent
     enough for banding. md5 (not xxhash64) so a DuckDB oracle
     reproduces values exactly; the 100 TB path swaps in
     ``F.xxhash64(shingle, salt)`` per hash without changing the plan
-    shape. One explode + one groupBy(id) shuffle; all ``min_h*`` are
-    partial aggregates."""
+    shape. One explode + one groupBy(id) on the sets' partitioning; all
+    ``min_h*`` are partial aggregates. (A per-row
+    ``array_min(transform(sh, md5))`` runs interpreted: ~26× slower.)"""
     width = 32 // num_hashes
     if width < 4:
         raise ValueError("num_hashes > 8 needs the salted-hash variant")
-    ex = (df.select(F.col(id_col), words_of(F.col(text_col)).alias("_w"))
-          .select(F.col(id_col),
-                  F.explode(shingles_from_words(F.col("_w"), shingle_n))
-                  .alias("shingle"))
-          .select(F.col(id_col), F.md5(F.col("shingle")).alias("h")))
-    # NOTE (round-6, measured negative result): aggregating the
-    # NUMERIC value of each hex window (conv→min(long)→hex back, to
-    # turn the SortAggregate into a hash aggregate) is ~15% SLOWER
-    # interleaved at sf0.1 — the per-shingle conv on the exploded
-    # frame costs more than the sort saves. String min stays.
-    aggs = [
-        F.min(F.substring(F.col("h"), 1 + i * width, width)).alias(f"min_h{i}")
-        for i in range(num_hashes)
-    ]
-    return ex.groupBy(id_col).agg(*aggs)
+    ex = (sets_.select(F.col(id_col), F.explode_outer("sh").alias("shingle"))
+          .filter("shingle IS NOT NULL")
+          .selectExpr(id_col, "md5(shingle) AS h"))
+    # measured negative result: min over the NUMERIC hex window
+    # (conv → min(long) → hex, a hash instead of a sort aggregate) is
+    # ~15% slower at sf0.1; the per-shingle conv costs more than the sort
+    return ex.groupBy(id_col).agg(*[
+        F.expr(f"min(substring(h, {1 + i * width}, {width})) AS min_h{i}")
+        for i in range(num_hashes)])
 
 
-def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", num_hashes: int = 8,
-                        bands: int = 4, shingle_n: int = 3,
+def lsh_candidate_pairs(sig: DataFrame, id_col: str = "doc_id",
+                        bands: int = 4,
                         max_bucket_size: int = 1000) -> DataFrame:
-    """Near-duplicate candidate pairs via banded LSH over the MinHash
-    signature: band signature = md5(concat of the band's mins); docs
-    sharing any band signature become a candidate pair (a < b).
+    """Near-duplicate candidate pairs via banded LSH over a
+    :func:`minhash_signatures` frame: band signature = md5(concat of
+    the band's mins); docs sharing any band signature become a
+    candidate pair ``(id_a, id_b)``, ``id_a < id_b``, emitted once.
 
-    Plan: signatures (1 shuffle) → band explode → self-join on
-    (band, band_sig) (1 hash-join shuffle) → distinct pairs. Buckets
-    above ``max_bucket_size`` are dropped before the join — boilerplate
-    explosion guard for web corpora."""
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
-    rows_per_band = num_hashes // bands
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.md5(F.concat_ws("|", *[
-                F.col(f"min_h{b * rows_per_band + r}") for r in range(rows_per_band)
-            ])).alias("band_sig"),
-        )
-        for b in range(bands)
-    ]
-    banded = sig.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("band")
-    ).select(id_col, "band.band_id", "band.band_sig")
-    # bucket-size guard as a WINDOW over the (band_id, band_sig)
-    # exchange the self-join needs anyway (round-6; guide §2.4: two
-    # operations keyed the same way share one exchange). The former
-    # shape — persist + separate groupBy job + broadcast anti-join —
-    # cost two extra driver-blocking jobs per call and left a cached
-    # copy behind; here the count-over-partition IS the bucket size
-    # (identical survivors: keep _bs ≤ max_bucket_size), the join's
-    # two sides reuse one exchange+sort (ReusedExchange), and the
-    # expensive minhash subtree is computed once, not persisted.
+    Plan: band explode → one exchange on ``(band_id, band_sig)`` that
+    the bucket-size window and the bucket ``groupBy`` share → each
+    bucket's sorted ids → their ``a < b`` pairs → distinct. No
+    self-join, so the signatures are computed once. The window drops
+    buckets above ``max_bucket_size`` rows before any id list is
+    collected, so a boilerplate bucket never reaches one reducer."""
+    mins = [c for c in sig.columns if c.startswith("min_h")]
+    rows = len(mins) // bands
+    band_sigs = F.expr("array(" + ", ".join(
+        f"md5(concat_ws('|', {', '.join(mins[b * rows:(b + 1) * rows])}))"
+        for b in range(bands)) + ")")
     wb = Window.partitionBy("band_id", "band_sig")
-    banded = (banded
-              .withColumn("_bs", F.count("*").over(wb))
-              .filter(F.col("_bs") <= max_bucket_size)
-              .drop("_bs"))
-    a = banded.alias("a")
-    b = banded.alias("b")
+    buckets = (sig.select(id_col, F.posexplode(band_sigs).alias("band_id", "band_sig"))
+               .withColumn("_bs", F.count("*").over(wb))
+               .filter(F.col("_bs") <= max_bucket_size)
+               .groupBy("band_id", "band_sig")
+               .agg(F.expr(f"array_sort(collect_set({id_col})) AS ids")))
+    # a two-argument lambda gets (element, 0-based index): the ids after
+    # position i start at 1-based slice index i + 2
+    pairs = F.expr("flatten(transform(ids, (a, i) -> transform("
+                   "slice(ids, i + 2, size(ids) - i - 1), "
+                   "b -> named_struct('id_a', a, 'id_b', b))))")
+    return buckets.select(F.explode(pairs).alias("p")).select("p.*").distinct()
+
+
+def ngram_jaccard_pairs(sets_: DataFrame, pairs: DataFrame,
+                        id_col: str = "doc_id") -> DataFrame:
+    """Exact Jaccard of candidate pairs over the :func:`shingle_sets`
+    frame the signatures came from (LSH verification): |∩| / |∪| with
+    ``array_intersect``/``array_union`` — fine while per-doc shingle
+    sets fit a row (web pages: ≤3k chars ⇒ ≤600 shingles)."""
+    union = "size(array_union(sh_a, sh_b))"
     return (
-        a.join(b, (F.col("a.band_id") == F.col("b.band_id"))
-               & (F.col("a.band_sig") == F.col("b.band_sig"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-
-
-def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame,
-                        text_col: str = "text", id_col: str = "doc_id",
-                        shingle_n: int = 3) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs (LSH verification
-    stage). Joins each side's shingle array then computes
-    |∩| / |∪| with ``array_intersect``/``array_union`` — fine while per-doc
-    shingle sets fit a row (web pages: ≤3k chars ⇒ ≤600 shingles)."""
-    sets_ = (df.select(F.col(id_col), words_of(F.col(text_col)).alias("_w"))
-             .select(F.col(id_col),
-                     shingles_from_words(F.col("_w"), shingle_n).alias("sh")))
-    out = (
         pairs
-        .join(sets_.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sets_.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-    )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.array_union(F.col("sh_a"), F.col("sh_b")))
-    return out.select(
-        "id_a", "id_b",
-        F.round(inter.cast("double") / F.when(union == 0, F.lit(1)).otherwise(union), 6)
-        .alias("jaccard"),
+        .join(sets_.selectExpr(f"{id_col} AS id_a", "sh AS sh_a"), "id_a")
+        .join(sets_.selectExpr(f"{id_col} AS id_b", "sh AS sh_b"), "id_b")
+        .selectExpr("id_a", "id_b",
+                    "round(CAST(size(array_intersect(sh_a, sh_b)) AS DOUBLE) / "
+                    f"CASE WHEN {union} = 0 THEN 1 ELSE {union} END, 6) AS jaccard")
     )
 
 
@@ -220,20 +215,15 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     match); bit *i* of the fingerprint is 1 iff more words set it than
     clear it. Pure column algebra: explode words → per-(doc) sums of
     ±1 per bit → bit assembly. One shuffle."""
-    words = F.split(F.lower(F.regexp_replace(F.col(text_col), r"\s+", " ")), " ")
-    ex = df.select(F.col(id_col), F.explode(words).alias("w"))
     # 60-bit int from the md5 hex prefix; DuckDB: ('0x'||substr(md5(w),1,15))::BIGINT
-    h = F.conv(F.substring(F.md5(F.col("w")), 1, 15), 16, 10).cast("long")
-    votes = [
-        F.sum(F.when(h.bitwiseAND(F.lit(1 << i)) != 0, 1).otherwise(-1)).alias(f"v{i}")
-        for i in range(bits)
-    ]
-    agg = ex.groupBy(id_col).agg(*votes)
-    fp = None
-    for i in range(bits):
-        bit = F.when(F.col(f"v{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        fp = bit if fp is None else fp + bit
-    return agg.select(F.col(id_col), fp.cast("long").alias("simhash"))
+    ex = (spread_by_id(df, id_col)
+          .select(F.col(id_col), F.explode(words_of(F.col(text_col))).alias("w"))
+          .selectExpr(id_col, "CAST(conv(substring(md5(w), 1, 15), 16, 10) AS BIGINT) AS h"))
+    votes = [F.expr(f"sum(CASE WHEN (h & {1 << i}) != 0 THEN 1 ELSE -1 END) AS v{i}")
+             for i in range(bits)]
+    fp = " + ".join(f"CASE WHEN v{i} > 0 THEN {1 << i} ELSE 0 END" for i in range(bits))
+    return (ex.groupBy(id_col).agg(*votes)
+            .selectExpr(id_col, f"CAST({fp} AS BIGINT) AS simhash"))
 
 
 def simhash_near_pairs(df: DataFrame, text_col: str = "text",

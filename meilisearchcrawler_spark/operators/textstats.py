@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import spread_by_id
+
 # Tiny high-frequency stopword lists: the n-gram-free heuristic langid.
 STOPWORDS: dict[str, list[str]] = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "for", "with", "was"],
@@ -45,7 +47,10 @@ def quality_features(df: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id") -> DataFrame:
     """Per-document quality signals + a composite score:
     length, tokens, mean word length, punctuation density, stopword
-    ratio (best language), uppercase ratio."""
+    ratio (best language), uppercase ratio. A narrow input is spread
+    first (:func:`spread_by_id`): the regex counts and four stopword
+    intersections per row are worth a shuffle of the text."""
+    df = spread_by_id(df, id_col)
     t = F.col(text_col)
     n_chars = F.length(t)
     n_tokens = token_count(t)
@@ -81,7 +86,9 @@ def language_id(df: DataFrame, text_col: str = "text",
                 id_col: str = "doc_id") -> DataFrame:
     """Heuristic language ID: argmax of stopword hits across the
     configured languages; ties and zero-hit rows → 'und'. Pure column
-    algebra (greatest + chained when)."""
+    algebra (greatest + chained when); a narrow input is spread first,
+    as in :func:`quality_features`."""
+    df = spread_by_id(df, id_col)
     t = F.col(text_col)
     hits = {lang: stopword_hits(t, lang) for lang in STOPWORDS}
     best = F.greatest(*hits.values())
