@@ -72,15 +72,15 @@ Scale notes (10^10 frontier, 1000 executors):
 from __future__ import annotations
 
 import json
-import os
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import ThreadPoolExecutor, wait
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, BooleanType, IntegerType, LongType, StringType, StructField,
@@ -101,6 +101,7 @@ from ..functions.urls import (
     is_excluded_arr,
     normalize_url,
     url_hash_col,
+    url_host,
 )
 from .bloom import (
     BITS_PER_PARTITION, NUM_HASHES, NUM_PARTITIONS, bitmap_delta, check_hashes,
@@ -466,7 +467,7 @@ class CrawlEngine:
                       for name in self.seeds}
         rows = [
             {"site": name, "url": normalize_url(s["seed_url"]),
-             "host": _host_of(s["seed_url"]), "depth": 0, "counter": 0}
+             "host": url_host(s["seed_url"]), "depth": 0, "counter": 0}
             for name, s in self.seeds.items()
         ]
         frontier0 = self.spark.createDataFrame(rows, schema=(
@@ -489,11 +490,7 @@ class CrawlEngine:
         """Latest committed bitmap per partition id (latest-wins view of
         the append-only bloom_parts log, like url_seen)."""
         log = self.catalog.read("bloom_parts")
-        if log is None:
-            return None
-        w = Window.partitionBy("pid").orderBy(F.desc("round"))
-        return (log.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1).drop("_rn"))
+        return None if log is None else _latest(log, "pid")
 
     def _counter_base_df(self) -> DataFrame:
         """Per-site running URL counter as a broadcast dimension (the
@@ -524,107 +521,85 @@ class CrawlEngine:
         round of the last frontier compaction, committed atomically
         with the snapshot (``meta['pops_floor']``); delta dirs at or
         below it are pruned driver-side from the manifest list, so this
-        reads exactly the files the dedicated table would have held.
-        Per-site counters are never reused, so a superset of pop keys
-        (e.g. resuming a pre-merge checkpoint with no floor recorded)
-        only anti-joins away rows that are already gone — always
-        safe."""
+        reads exactly the files the dedicated table would have held."""
         floor = self.catalog.meta.get("pops_floor", -1)
         log = self.catalog.read_since("crawl_log", floor)
         if log is None:
             return None
         return log.select("site", "counter")
 
+    def _floor_view(self, table: str, floor_key: str, log_table: str,
+                    key: str, keep: Column | None = None) -> DataFrame | None:
+        """Membership view = ``table``'s compacted snapshot + ``(site,
+        key, round, bucket)`` rows DERIVED from ``log_table``'s delta
+        dirs after ``meta[floor_key]``, the round the snapshot was
+        folded at (``keep`` selects the log rows that belong to the
+        set). A compacted log snapshot is never a delta source (a
+        latest-wins fold drops history rows). The manifest-name pruning
+        of :meth:`CheckpointCatalog.read_since` is the IO fast path;
+        the ROW-level round filter is the correctness boundary — it
+        keeps exactly the post-floor rounds and drops url_seen_log's
+        round=-1 initial-cache import (prior CACHE state, not content
+        indexed by this crawl; the reference's duplicate-content window
+        spans only the latter, crawler.py:441-447 seeding, F10)."""
+        comp = self.catalog.read(table)
+        floor = self.catalog.meta.get(floor_key, -1)
+        log = self.catalog.read_since(log_table, floor,
+                                      include_compacted=False)
+        if log is not None:
+            log = log.filter(F.col("round") > F.lit(floor))
+            if keep is not None:
+                log = log.filter(keep)
+            log = log.select("site", key, "round",
+                             bucket_col(F.col(key), self.cfg.seen_buckets)
+                             .alias("bucket"))
+        return _union(comp, log)
+
     def _visited_view(self) -> DataFrame | None:
         """Visited membership = compacted snapshot + deltas DERIVED
-        from ``crawl_log``: the log's when-chain makes actions
-        ``admitted``/``ext_skipped`` exactly the ``marks_visited``
-        predicate the dedicated per-round visited delta used to stage
-        (admitted ⇔ admissible; ext_skipped ⇔ f_ext ∧ ¬f_visited ∧
-        ¬f_excluded — reference pop-time precedence crawler.py:
-        1163-1173), and ``bucket_col(url)`` ≡ the staged
+        from ``crawl_log``: actions ``admitted``/``ext_skipped`` are
+        exactly the rows :meth:`_marks_visited` selects (see
+        :meth:`_pop_action`), and ``bucket_col(url)`` ≡ the staged
         ``pmod(url_hash, nb)`` (both xxhash64). One fewer staged write
-        per round; legacy checkpoints with r*-deltas still in the
-        visited table read as duplicates, which every consumer
-        (semi/anti membership, min-round compaction) is insensitive
-        to."""
-        comp = self.catalog.read("visited")
-        floor = self.catalog.meta.get("visited_floor", -1)
-        log = self.catalog.read_since("crawl_log", floor)
-        nb = self.cfg.seen_buckets
-        derived = None
-        if log is not None:
-            derived = (log.filter(F.col("round") > F.lit(floor))
-                       .filter(F.col("action")
-                               .isin("admitted", "ext_skipped"))
-                       .select("site", "url", "round",
-                               bucket_col(F.col("url"), nb)
-                               .alias("bucket")))
-        if comp is None:
-            return derived
-        return comp if derived is None else comp.unionByName(derived)
+        per round."""
+        return self._floor_view(
+            "visited", "visited_floor", "crawl_log", "url",
+            keep=F.col("action").isin("admitted", "ext_skipped"))
 
     def _content_hashes_view(self) -> DataFrame | None:
         """Indexed-content-hash membership (F10 history) = compacted
         snapshot + deltas DERIVED from ``url_seen_log``'s post-floor
         delta dirs — both tables staged projections of the same
         ``indexed`` frame, so the derived rows are byte-identical to
-        what the dedicated write produced. ``include_compacted=False``:
-        url_seen's latest-wins snapshot is NOT a valid hash-history
-        source (a re-indexed URL's older hash leaves it) — only the
-        append deltas are, and :meth:`_compact` folds content_hashes
-        BEFORE url_seen so a delta dir newer than the floor is never
-        destroyed at any crash point."""
-        comp = self.catalog.read("content_hashes")
-        floor = self.catalog.meta.get("content_hashes_floor", -1)
-        log = self.catalog.read_since("url_seen_log", floor,
-                                      include_compacted=False)
-        nb = self.cfg.seen_buckets
-        derived = None
-        if log is not None:
-            # the ROW-level round filter is the correctness boundary
-            # (manifest-name pruning is just the IO fast path): it
-            # keeps exactly the post-floor rounds AND excludes the
-            # round=-1 initial-cache import — seeded url_seen rows are
-            # prior CACHE state, not content indexed by this crawl,
-            # and the reference's duplicate-content window only spans
-            # the latter (crawler.py:441-447 seeding; F10)
-            derived = (log.filter(F.col("round") > F.lit(floor))
-                       .select("site", "content_hash", "round",
-                               bucket_col(F.col("content_hash"), nb)
-                               .alias("bucket")))
-        if comp is None:
-            return derived
-        return comp if derived is None else comp.unionByName(derived)
+        what the dedicated write produced. url_seen's latest-wins
+        snapshot is NOT a valid hash-history source (a re-indexed URL's
+        older hash leaves it) — only the append deltas are, and
+        :meth:`_compact` folds content_hashes BEFORE url_seen so a
+        delta dir newer than the floor is never destroyed at any crash
+        point."""
+        return self._floor_view(
+            "content_hashes", "content_hashes_floor", "url_seen_log",
+            "content_hash")
 
-    def _pops_rows_bound(self) -> int | None:
-        """Exact row count of :meth:`_pops_view` (crawl_log rows past
-        the pops floor = pops since the last frontier compaction —
-        the same per-site counters the cutoff correction uses). Gates
-        the broadcast hint on the pops anti-joins: without it the
+    def _minus_pops(self, df: DataFrame) -> DataFrame:
+        """``df`` without the frontier rows popped since the last
+        compaction (anti-join on ``(site, counter)``). The pops view
+        holds exactly ``sum(pops_since_compact)`` rows — ``_compact``
+        zeroes the counters in the commit that advances the pops
+        floor — and that bound gates the broadcast hint: without it the
         static (latency-mode) compile sort-merges, shuffling the
-        frontier side — at the frontier10m shape that is a 10^7-row
-        exchange to anti-join a few thousand pops."""
-        if ("pops_floor" not in self.catalog.meta
-                and any(os.path.basename(r).startswith("compact_")
-                        for r in (self.catalog.manifest["tables"]
-                                  .get("frontier_adds") or ()))):
-            # legacy checkpoint: compacted frontier but no pops floor —
-            # the view reads every crawl_log round, so the since-
-            # compaction counters are not a bound
-            return None
-        return sum(st.pops_since_compact for st in self.sites.values())
+        frontier side — at the frontier10m shape a 10^7-row exchange
+        to anti-join a few thousand pops."""
+        pops = self._pops_view()
+        if pops is None:
+            return df
+        bound = sum(st.pops_since_compact for st in self.sites.values())
+        return df.join(self._bc(pops, bound), ["site", "counter"],
+                       "left_anti")
 
     def _live_frontier(self) -> DataFrame | None:
         adds = self.catalog.read("frontier_adds")
-        if adds is None:
-            return None
-        pops = self._pops_view()
-        if pops is not None:
-            pb = self._pops_rows_bound()
-            adds = adds.join(pops if pb is None else self._bc(pops, pb),
-                             ["site", "counter"], "left_anti")
-        return adds
+        return None if adds is None else self._minus_pops(adds)
 
     def _pop_frontier(self, budgets: dict[str, int],
                       prefix_k: int) -> DataFrame | None:
@@ -637,7 +612,6 @@ class CrawlEngine:
         since compaction are bounded by ``compact_every`` rounds and
         read whole."""
         comp, deltas = self.catalog.read_split("frontier_adds")
-        parts = []
         if comp is not None:
             cut = pop_cutoff(
                 self.catalog.meta.get("frontier_hist"),
@@ -648,20 +622,10 @@ class CrawlEngine:
                 comp = comp.filter(
                     (F.col("depth") > g)
                     | ((F.col("depth") == g) & (F.col("counter") <= c)))
-            parts.append(comp)
-        if deltas is not None:
-            parts.append(deltas)
-        if not parts:
+        adds = _union(comp, deltas)
+        if adds is None:
             return None
-        adds = parts[0]
-        for p in parts[1:]:
-            adds = adds.unionByName(p)
-        pops = self._pops_view()
-        if pops is not None:
-            pb = self._pops_rows_bound()
-            adds = adds.join(pops if pb is None else self._bc(pops, pb),
-                             ["site", "counter"], "left_anti")
-        return adds.filter(F.col("site").isin(list(budgets)))
+        return self._minus_pops(adds).filter(F.col("site").isin(list(budgets)))
 
     def _url_seen_latest(self) -> DataFrame | None:
         """Latest-wins view of the FULL url_seen log — a corpus-sized
@@ -669,51 +633,40 @@ class CrawlEngine:
         :meth:`url_seen` view, never inside a round (rounds use the
         key-pruned :meth:`_seen_for`)."""
         log = self.catalog.read("url_seen_log")
-        if log is None:
-            return None
-        w = Window.partitionBy("url").orderBy(F.desc("round"))
-        return (log.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1).drop("_rn"))
-
-    def _prune_buckets(self, big: DataFrame, keys: DataFrame,
-                       key_col: str) -> DataFrame:
-        """Restrict a bucket-carrying table to the storage buckets of
-        ``keys[key_col]``. The bucket list is collected (bounded by the
-        round's key count) so it pushes down as a parquet ``In`` filter
-        — file/row-group skipping over the range-partitioned compacted
-        snapshot; uncompacted deltas are bounded by ``compact_every``."""
-        bs = [r[0] for r in keys.select(
-            bucket_col(F.col(key_col), self.cfg.seen_buckets).alias("b"))
-            .distinct().collect()]
-        if not bs:
-            return big.limit(0)
-        return big.filter(F.col("bucket").isin(bs))
+        return None if log is None else _latest(log, "url")
 
     def _pruned(self, table: str, big: DataFrame, keys: DataFrame,
                 key_col: str,
                 bucket_list: list[int] | None = None) -> DataFrame:
-        """Adaptive bucket pruning: the bucket-list collect is one
-        small driver job that only pays once ``table`` is big enough
-        for file-skipping to matter — below ``prune_min_bytes`` the
-        broadcast-filtered scan wins outright (AQE spirit; file sizes
-        come from the catalog manifest, no Spark job). For the derived
-        visited/content_hashes views the bytes count only the compacted
-        snapshot (deltas ride in crawl_log/url_seen_log) — a slight
-        undercount that at most delays the first prune by one
-        compaction cycle; past it the snapshot dominates.
+        """Restrict a bucket-carrying table to the storage buckets of
+        ``keys[key_col]``: the bucket list pushes down as a parquet
+        ``In`` filter — file/row-group skipping over the
+        range-partitioned compacted snapshot; uncompacted deltas are
+        bounded by ``compact_every``.
+
+        Adaptive: the bucket-list collect is one small driver job that
+        only pays once ``table`` is big enough for file-skipping to
+        matter — below ``prune_min_bytes`` the broadcast-filtered scan
+        wins outright (AQE spirit; file sizes come from the catalog
+        manifest, no Spark job). For the derived visited/content_hashes
+        views the bytes count only the compacted snapshot (deltas ride
+        in crawl_log/url_seen_log) — a slight undercount that at most
+        delays the first prune by one compaction cycle; past it the
+        snapshot dominates.
 
         ``bucket_list``: a caller that already holds the keys' exact
         storage-bucket set (folded into another aggregation job over
         the same frame — the link-dedup path collects count + bucket
-        sets in ONE action) passes it here and skips the dedicated
-        collect entirely."""
+        sets in ONE action) passes it here and skips the collect."""
         if self.catalog.table_bytes(table) < self.cfg.prune_min_bytes:
             return big
-        if bucket_list is not None:
-            if not bucket_list:
-                return big.limit(0)
-            return big.filter(F.col("bucket").isin(bucket_list))
-        return self._prune_buckets(big, keys, key_col)
+        if bucket_list is None:
+            bucket_list = [r[0] for r in keys.select(
+                bucket_col(F.col(key_col), self.cfg.seen_buckets).alias("b"))
+                .distinct().collect()]
+        if not bucket_list:
+            return big.limit(0)
+        return big.filter(F.col("bucket").isin(bucket_list))
 
     def _seen_for(self, keys: DataFrame, key_col: str = "url") -> DataFrame | None:
         """Latest-wins url_seen rows for exactly the round's key set:
@@ -727,12 +680,9 @@ class CrawlEngine:
             return None
         pruned = (self._pruned("url_seen_log", log, keys, key_col)
                   .join(self._bc(keys.select(F.col(key_col).alias("url"))
-                                 .distinct(),
-                                 getattr(self, "_pop_bound", None)),
+                                 .distinct(), self._pop_bound),
                         "url", "left_semi"))
-        w = Window.partitionBy("url").orderBy(F.desc("round"))
-        return (pruned.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1).drop("_rn", "bucket"))
+        return _latest(pruned, "url").drop("bucket")
 
     def _present_keys(self, big: DataFrame, keys: DataFrame,
                       cols: list[str],
@@ -803,15 +753,6 @@ class CrawlEngine:
         """One admission+fetch round across all active sites. Returns
         False when no site had frontier left (crawl complete)."""
         now = T0 + self.round_no * self.cfg.round_seconds
-        # the live-frontier view is only built here to detect the
-        # no-frontier-at-all case; when any tracked size proves rows
-        # exist, skip the per-round catalog read (driver-side parquet
-        # listing + plan construction) that the view costs
-        if not any(st.frontier_rows for st in self.sites.values()):
-            if self._live_frontier() is None:
-                for s in self.sites.values():
-                    s.active = False
-                return False
         # per-site budgets (max_pages semantics, crawler.py:1155-1160)
         budgets = {}
         for name, st in self.sites.items():
@@ -851,27 +792,33 @@ class CrawlEngine:
         # this, not the pop bound, or a 2k-URL round over many sites
         # funnels a ~10^5-row prefix through width-1 exchanges
         # (a single-task final top-K limit + window).
-        pk0 = max(budgets.values()) * 8 + 64
-        self._sel_bound = sum(self._site_bound(s, pk0) for s in budgets)
+        prefix_k = max(budgets.values()) * 8 + 64
+        self._sel_bound = sum(self._site_bound(s, prefix_k) for s in budgets)
 
         # the filter never leaves the bloom_parts table — one
         # latest-wins view per round feeds the cogrouped probes and the
         # delta merge. It is None until a compaction creates the filter
         # (see _compact); such a round runs no Bloom job at all
         self._bloom_table = self._bloom_latest()
+        # round-scoped caches (_persist_tmp) and background jobs
+        # (_submit) share one lifetime: the round. Whether it commits
+        # or raises, every job is joined before the caches it reads go
         self._round_tmp: list[DataFrame] = []
+        self._round_futs: list = []
         try:
             with self._latency_mode():
-                popped = self._select_pops(budgets)
+                popped = self._select_pops(budgets, prefix_k)
                 if popped is None:
                     for name in active_sites:
                         self.sites[name].active = False
                     return False
                 progressed = self._execute_round(popped, now)
         finally:
+            wait(self._round_futs)
             for df in self._round_tmp:
                 df.unpersist()
             self._round_tmp = []
+            self._round_futs = []
             self._bloom_table = None
         # compaction is corpus-sized — always compiled under AQE,
         # outside the latency scope (round frames are already released)
@@ -946,11 +893,18 @@ class CrawlEngine:
         return F.broadcast(df)
 
     def _persist_tmp(self, df: DataFrame) -> DataFrame:
-        """Persist a round-scoped frame (bucket-prune collects and the
-        plans they feed both read it); released at the round barrier."""
+        """Persist a round-scoped frame (a barrier action and the plans
+        it feeds both read it); released when :meth:`run_round` ends."""
         df = df.persist()
         self._round_tmp.append(df)
         return df
+
+    def _submit(self, fn, *args):
+        """Run ``fn`` on the engine pool as a round-scoped background
+        job; :meth:`run_round` joins it before the round ends."""
+        fut = self._eager_pool.submit(fn, *args)
+        self._round_futs.append(fut)
+        return fut
 
     def _cut(self, df: DataFrame) -> DataFrame:
         """TRUNCATE the lineage of a bounded round frame
@@ -1009,7 +963,7 @@ class CrawlEngine:
             probed = self._persist_tmp(self._bloom_split(
                 cand.select("site", "counter", "url", "url_hash")))
             maybe = probed.filter(F.col("_maybe"))
-            bound = getattr(self, "_prefix_bound", None)
+            bound = self._prefix_bound
             present = self._present_keys(
                 self._pruned("visited", visited, maybe, "url"),
                 maybe, ["site", "url"], est_rows=bound)
@@ -1027,6 +981,29 @@ class CrawlEngine:
             "admissible",
             ~F.col("f_visited") & ~F.col("f_excluded") & ~F.col("f_ext")
             & ~F.col("f_robots_denied"))
+
+    @staticmethod
+    def _pop_action() -> Column:
+        """crawl_log action of a popped row: ``admitted``, else its skip
+        reason in the reference's pop-time precedence visited →
+        excluded → extension → robots (crawler.py:1163-1178)."""
+        return (F.when(F.col("admissible"), "admitted")
+                .when(F.col("f_visited"), "visited_dup")
+                .when(F.col("f_excluded"), "excluded")
+                .when(F.col("f_ext"), "ext_skipped")
+                .otherwise("robots_denied"))
+
+    @staticmethod
+    def _marks_visited() -> Column:
+        """Popped rows that enter the visited set: every batch member
+        plus the extension skips (crawler.py:1168-1173, 1185-1187). An
+        excluded URL ``continue``s BEFORE the extension check, so a URL
+        both excluded and extension-suffixed never enters (it may be
+        re-pushed on rediscovery). These are exactly the rows
+        :meth:`_pop_action` labels ``admitted`` or ``ext_skipped``,
+        which is how :meth:`_visited_view` reads them back."""
+        return F.col("admissible") | (
+            F.col("f_ext") & ~F.col("f_visited") & ~F.col("f_excluded"))
 
     def _bloom_split(self, df: DataFrame) -> DataFrame:
         """Adds boolean ``_maybe``: True iff the row's ``url_hash``
@@ -1102,7 +1079,8 @@ class CrawlEngine:
                 .groupBy("pid")
                 .applyInPandas(build, schema="pid int, bits binary"))
 
-    def _select_pops(self, budgets: dict[str, int]) -> DataFrame | None:
+    def _select_pops(self, budgets: dict[str, int],
+                     prefix_k: int) -> DataFrame | None:
         """Pop cutoff with candidate-prefix escalation. Returns the
         popped rows with admission flags + pos_in_round, or None when
         the frontier is empty for every active site.
@@ -1114,9 +1092,9 @@ class CrawlEngine:
         sees the whole frontier — and after a compaction the scan
         itself file-skips everything outside the deepest band. The
         view is rebuilt per escalation iteration because the safe
-        cutoff depends on ``prefix_k``."""
+        cutoff depends on ``prefix_k``, the initial candidate prefix
+        per site, which escalates 8× per retry."""
         order = [F.desc("depth"), F.asc("counter")]
-        prefix_k = max(budgets.values()) * 8 + 64
         # per-round per-site budgets as a broadcast dimension (plan size
         # O(1) in site count; the values change every round, so they are
         # data, not plan literals)
@@ -1217,30 +1195,16 @@ class CrawlEngine:
         # write to a barrier flush (round 5, interleaved one-JVM
         # median-of-5 on the bench.py crawl_round workload): 51.0 s →
         # 43.8 s (scripts/eagerflush_ab_out.json).
-        pool = self._eager_pool
         staged_futs: list[tuple[str, object]] = []
 
         def stage(table: str, df: DataFrame):
             staged_futs.append(
-                (table, pool.submit(self.catalog.stage, table, df, rno)))
-
-        def _flush_stages() -> dict[str, list[str]]:
-            staged: dict[str, list[str]] = {}
-            for t, fut in staged_futs:
-                staged.setdefault(t, []).append(fut.result())
-            fetch_kick.result()
-            return staged
+                (table, self._submit(self.catalog.stage, table, df, rno)))
 
         # crawl_log: the ordering-equivalence artifact (FIXTURES.md §7)
-        log_action = (
-            F.when(F.col("admissible"), "admitted")
-            .when(F.col("f_visited"), "visited_dup")
-            .when(F.col("f_excluded"), "excluded")
-            .when(F.col("f_ext"), "ext_skipped")
-            .otherwise("robots_denied"))
         stage("crawl_log", popped.select(
             "site", "url", "depth", "counter", "pos_in_round",
-            log_action.alias("action"), F.lit(rno).alias("round")))
+            self._pop_action().alias("action"), F.lit(rno).alias("round")))
 
         admitted = popped.filter(F.col("admissible"))
 
@@ -1284,7 +1248,7 @@ class CrawlEngine:
         # buys the overlap; failure surfacing is unchanged (the write
         # that shares the checkpoint re-raises the same error, and the
         # future is joined at the barrier).
-        fetch_kick = pool.submit(
+        fetch_kick = self._submit(
             lambda: fetched.write.format("noop").mode("overwrite").save())
         # ---- indexing decision (crawler.py:1033-1058) ----
         ok = fetched.filter(F.col("fetch_status") == 200)
@@ -1330,10 +1294,10 @@ class CrawlEngine:
                 F.broadcast(seen_hashes),
                 ["site", "content_hash"], "left_anti")
         wdup = Window.partitionBy("site", "content_hash").orderBy("pos_in_round")
-        indexed = (candidates
-                   .withColumn("_dup_rn", F.row_number().over(wdup))
-                   .filter(F.col("_dup_rn") == 1).drop("_dup_rn"))
-        indexed.persist()
+        indexed = self._persist_tmp(
+            candidates
+            .withColumn("_dup_rn", F.row_number().over(wdup))
+            .filter(F.col("_dup_rn") == 1).drop("_dup_rn"))
 
         # ---- intra-round cache effects ----------------------------
         # The reference updates the cache sequentially *within* a
@@ -1366,7 +1330,7 @@ class CrawlEngine:
             F.col("_stored_lm").isNotNull()
             & F.col("last_modified").isNotNull()
             & (F.col("_stored_lm") == F.col("last_modified")))
-        intra304 = (
+        intra304 = self._persist_tmp(
             ok.join(self._bc(first_indexed
                              .select("site", F.col("final_url").alias("url"),
                                      "_first_pos", "_stored_etag",
@@ -1376,12 +1340,13 @@ class CrawlEngine:
                     & validators_match)
             .select("site", "url", "pos_in_round",
                     F.md5(F.col("url")).alias("refresh_id")))
-        intra304.persist()
+        # the intra-round 304 keys, flagged: joined into the skip
+        # classification and the fetch metrics, anti-joined out of link
+        # discovery (a 304 extracts no links)
+        is304 = self._bc(intra304.select("site", "pos_in_round")
+                         .withColumn("_is304", F.lit(True)), self._pop_bound)
         intra_skip = (
-            ok.join(self._bc(intra304.select(
-                "site", "pos_in_round").withColumn("_is304", F.lit(True)),
-                self._pop_bound),
-                ["site", "pos_in_round"], "left")
+            ok.join(is304, ["site", "pos_in_round"], "left")
             .join(self._bc(first_indexed, self._pop_bound),
                   ["site", "final_url"], "left")
             .withColumn("f_cache_skip_final",
@@ -1419,20 +1384,13 @@ class CrawlEngine:
             F.lit(now).alias("last_crawled_at"), F.lit(rno).alias("round")))
         stage("refreshes", refreshes)
 
-        # ---- Bloom delta, once the filter exists: every batch member
-        # + ext-skips (crawler.py:1168-1173, 1185-1187). Pop-time
-        # precedence is visited → excluded → extension
-        # (crawler.py:1163-1173): an excluded URL `continue`s BEFORE
-        # the extension check, so a URL that is both excluded and
-        # extension-suffixed is never marked visited (it may be
-        # re-pushed on rediscovery). No visited delta is staged:
-        # crawl_log actions admitted/ext_skipped ARE marks_visited, and
-        # _visited_view derives these rows back (round-5 write-merge).
+        # ---- Bloom delta, once the filter exists, over the rows that
+        # enter the visited set. No visited delta is staged: crawl_log
+        # carries the same rows and _visited_view derives them back
+        # (round-5 write-merge).
         prev = self._bloom_table
         if prev is not None:
-            marks_visited = F.col("admissible") | (
-                F.col("f_ext") & ~F.col("f_visited") & ~F.col("f_excluded"))
-            delta_df = self._bloom_bitmaps(popped.filter(marks_visited))
+            delta_df = self._bloom_bitmaps(popped.filter(self._marks_visited()))
             # merge executor-side (broadcast join on the ≤P-row parts
             # view); no bitmap ever reaches the driver
             joined = (delta_df
@@ -1467,17 +1425,10 @@ class CrawlEngine:
             .when(F.col("fetch_status") == 0, "not_indexed_content_type")
             .otherwise("fetched"))
         fetch_counts = (
-            fetched.join(self._bc(intra304.select(
-                "site", "pos_in_round").withColumn("_is304", F.lit(True)),
-                self._pop_bound),
-                ["site", "pos_in_round"], "left")
+            fetched.join(is304, ["site", "pos_in_round"], "left")
             .groupBy("site", action.alias("action")).count())
         skip_counts = popped.filter(~F.col("admissible")).groupBy(
-            "site",
-            F.when(F.col("f_visited"), "visited_dup")
-            .when(F.col("f_excluded"), "excluded")
-            .when(F.col("f_ext"), "ext_skipped")
-            .otherwise("robots_denied").alias("action")).count()
+            "site", self._pop_action().alias("action")).count()
         idx_counts = indexed.groupBy("site").agg(F.count("*").alias("count")) \
                             .withColumn("action", F.lit("indexed")) \
                             .select("site", "action", "count")
@@ -1489,7 +1440,7 @@ class CrawlEngine:
                         .unionByName(idx_counts)
                         .unionByName(cache_skip_counts)
                         .withColumn("round", F.lit(rno)))
-        fut_metrics = pool.submit(metrics_head.collect)
+        fut_metrics = self._submit(metrics_head.collect)
         # lineage (S9) depends only on the fetched frame — stage it
         # here so its write overlaps the link-dedup stats job instead
         # of queueing behind the whole adds pipeline
@@ -1504,32 +1455,29 @@ class CrawlEngine:
         # ---- link discovery + frontier push (crawler.py:1203-1208) ----
         links = (
             fetched.filter((F.col("fetch_status") == 200) & F.col("links").isNotNull())
-            .join(self._bc(intra304.select("site", "pos_in_round"),
-                           self._pop_bound),
-                  ["site", "pos_in_round"], "left_anti")
+            .join(is304, ["site", "pos_in_round"], "left_anti")
             .select("site", "pos_in_round",
                     (F.col("depth") + 1).alias("link_depth"),
                     F.posexplode("links").alias("link_pos", "link_url")))
         new_links = self._dedup_links(links, popped)
-        deduped = None
         if cfg.max_queue_size is not None:
             # the cap path evaluates the dedup subtree twice (per-page
             # rollup + kept rows) — cache it
-            deduped = new_links.persist()
-            new_links = self._apply_queue_cap(deduped, popped)
+            new_links = self._apply_queue_cap(self._persist_tmp(new_links),
+                                              popped)
 
         # counter assignment in insertion order (crawler.py:1206-1207);
         # per-site counter bases join in as broadcast data (O(1) plan)
         wcnt = Window.partitionBy("site").orderBy("pos_in_round", "link_pos")
         new_links = new_links.withColumn("_idx", F.row_number().over(wcnt) - 1)
-        adds = (new_links.join(F.broadcast(self._counter_base_df()),
-                               "site", "left")
-                .select("site", F.col("link_url").alias("url"),
-                        F.col("host"), F.col("link_depth").alias("depth"),
-                        (F.coalesce(F.col("_base"), F.lit(0))
-                         + F.col("_idx")).cast("long").alias("counter"))
-                .withColumn("bucket", bucket_col(F.col("url"), nb))
-                .persist())
+        adds = self._persist_tmp(
+            new_links.join(F.broadcast(self._counter_base_df()),
+                           "site", "left")
+            .select("site", F.col("link_url").alias("url"),
+                    F.col("host"), F.col("link_depth").alias("depth"),
+                    (F.coalesce(F.col("_base"), F.lit(0))
+                     + F.col("_idx")).cast("long").alias("counter"))
+            .withColumn("bucket", bucket_col(F.col("url"), nb)))
         stage("frontier_adds", adds)
         # no frontier_pops delta: crawl_log (staged above) carries
         # site/counter/round for every popped row, and _pops_view reads
@@ -1547,7 +1495,7 @@ class CrawlEngine:
         metrics_rows = fut_metrics.result() + pushed_counts.collect()
         # driver-resident rows: direct pyarrow write, no Spark job (an
         # empty round writes an empty file with the schema)
-        staged_futs.append(("metrics", pool.submit(
+        staged_futs.append(("metrics", self._submit(
             self.catalog.stage_rows, "metrics",
             [{"site": r["site"], "action": r["action"],
               "count": int(r["count"]), "round": rno}
@@ -1555,6 +1503,16 @@ class CrawlEngine:
             pa.schema([("site", pa.string()), ("action", pa.string()),
                        ("count", pa.int64()), ("round", pa.int32())]),
             rno)))
+
+        # ---- barrier: join EVERY background job before raising the
+        # first failure and before any driver state moves, so a round
+        # that fails leaves the engine as it found it (and no write
+        # outlives the caches it reads)
+        wait(self._round_futs)
+        staged: dict[str, list[str]] = {}
+        for t, fut in staged_futs:
+            staged.setdefault(t, []).append(fut.result())
+        fetch_kick.result()
 
         # ---- driver state ----
         per_site_fetch = {}
@@ -1587,12 +1545,7 @@ class CrawlEngine:
                 any_pop = True
 
         self.round_no += 1
-        self.catalog.commit_round(rno, _flush_stages(), self._state_dict())
-        indexed.unpersist()
-        intra304.unpersist()
-        adds.unpersist()
-        if deduped is not None:
-            deduped.unpersist()
+        self.catalog.commit_round(rno, staged, self._state_dict())
         return any_pop
 
     def _bucket_layout(self, df: DataFrame, order_key: str) -> DataFrame:
@@ -1631,53 +1584,58 @@ class CrawlEngine:
         production scale these are corpus-sized shuffles and running
         all of them at once trades straggler overlap against peak
         execution-memory/spill pressure."""
-        live = self._live_frontier()
-        if live is not None:
-            live = live.persist()
         n = min(self.cfg.seen_buckets, max(self.cfg.shuffle_partitions, 1))
         hashes = self._content_hashes_view()
         seen = self._url_seen_latest()
         visited = self._visited_view()
         bloom = self._bloom_latest()
         futs: dict = {}
-        with ThreadPoolExecutor(max_workers=_COMPACT_POOL_WORKERS) as ex:
+        live = self._live_frontier()
+        if live is not None:
+            live = live.persist()
+        try:
+            with ThreadPoolExecutor(max_workers=_COMPACT_POOL_WORKERS) as ex:
+                if live is not None:
+                    # bucket-clustered (site, url, counter) projection for
+                    # the link-dedup membership scan (Iceberg
+                    # secondary-index analog)
+                    futs["frontier_index"] = ex.submit(
+                        self.catalog.prepare_compact, "frontier_index",
+                        self._bucket_layout(
+                            live.select("site", "url", "counter", "bucket"),
+                            "url"))
+                    # pop-layout snapshot: depth/counter-clustered so the
+                    # histogram cutoff predicate skips files
+                    futs["frontier_adds"] = ex.submit(
+                        self.catalog.prepare_compact, "frontier_adds",
+                        live.repartitionByRange(n, "depth", "counter")
+                            .sortWithinPartitions("depth", "counter"))
+                    futs["hist"] = ex.submit(frontier_hist, live)
+                if hashes is not None:
+                    futs["content_hashes"] = ex.submit(
+                        self.catalog.prepare_compact, "content_hashes",
+                        self._bucket_layout(
+                            hashes.groupBy("site", "content_hash", "bucket")
+                            .agg(F.min("round").alias("round")),
+                            "content_hash"))
+                if seen is not None:
+                    futs["url_seen_log"] = ex.submit(
+                        self.catalog.prepare_compact, "url_seen_log",
+                        self._bucket_layout(seen, "url"))
+                if visited is not None:
+                    futs["visited"] = ex.submit(
+                        self.catalog.prepare_compact, "visited",
+                        self._bucket_layout(
+                            visited.groupBy("site", "url", "bucket")
+                            .agg(F.min("round").alias("round")), "url"))
+                if bloom is not None:
+                    futs["bloom_parts"] = ex.submit(
+                        self.catalog.prepare_compact, "bloom_parts", bloom)
+                done = {k: f.result() for k, f in futs.items()}
+        finally:
+            # the snapshot writes are its only readers
             if live is not None:
-                # bucket-clustered (site, url, counter) projection for
-                # the link-dedup membership scan (Iceberg
-                # secondary-index analog)
-                futs["frontier_index"] = ex.submit(
-                    self.catalog.prepare_compact, "frontier_index",
-                    self._bucket_layout(
-                        live.select("site", "url", "counter", "bucket"),
-                        "url"))
-                # pop-layout snapshot: depth/counter-clustered so the
-                # histogram cutoff predicate skips files
-                futs["frontier_adds"] = ex.submit(
-                    self.catalog.prepare_compact, "frontier_adds",
-                    live.repartitionByRange(n, "depth", "counter")
-                        .sortWithinPartitions("depth", "counter"))
-                futs["hist"] = ex.submit(frontier_hist, live)
-            if hashes is not None:
-                futs["content_hashes"] = ex.submit(
-                    self.catalog.prepare_compact, "content_hashes",
-                    self._bucket_layout(
-                        hashes.groupBy("site", "content_hash", "bucket")
-                        .agg(F.min("round").alias("round")),
-                        "content_hash"))
-            if seen is not None:
-                futs["url_seen_log"] = ex.submit(
-                    self.catalog.prepare_compact, "url_seen_log",
-                    self._bucket_layout(seen, "url"))
-            if visited is not None:
-                futs["visited"] = ex.submit(
-                    self.catalog.prepare_compact, "visited",
-                    self._bucket_layout(
-                        visited.groupBy("site", "url", "bucket")
-                        .agg(F.min("round").alias("round")), "url"))
-            if bloom is not None:
-                futs["bloom_parts"] = ex.submit(
-                    self.catalog.prepare_compact, "bloom_parts", bloom)
-            done = {k: f.result() for k, f in futs.items()}
+                live.unpersist()
         if live is not None:
             # index publishes BEFORE the snapshot: a crash between the
             # two leaves the index a SUPERSET of the frontier (extra
@@ -1695,7 +1653,6 @@ class CrawlEngine:
                       # miss a pop at any crash point
                       "pops_floor": self.catalog.committed_round},
                 state=self._state_dict())
-            live.unpersist()
         # content_hashes publishes BEFORE url_seen_log: its view
         # derives deltas from url_seen's r*-dirs, so the floor must
         # advance while those dirs still exist — after this,
@@ -1744,14 +1701,11 @@ class CrawlEngine:
         links = (links.withColumn("_rn", F.row_number().over(wfirst))
                  .filter(F.col("_rn") == 1).drop("_rn"))
         # vs this round's batch (visited ∪ in_progress during collect);
-        # excluded+extension pops never enter visited (reference
-        # precedence, crawler.py:1163-1173) so links to them re-push
+        # pops that never enter visited (see _marks_visited) re-push
         links = links.join(
-            self._bc(popped.filter(F.col("admissible")
-                                   | (F.col("f_ext") & ~F.col("f_visited")
-                                      & ~F.col("f_excluded")))
+            self._bc(popped.filter(self._marks_visited())
                      .select("site", F.col("url").alias("link_url")),
-                     getattr(self, "_pop_bound", None)),
+                     self._pop_bound),
             ["site", "link_url"], "left_anti")
         # vs historical visited (Bloom prefilter → exact membership):
         # the exact check scans visited bucket-pruned with the maybe-set
@@ -1796,17 +1750,14 @@ class CrawlEngine:
         # Inverted the same way: one bounded-build-side membership scan
         # (link-keys semi, then pops anti), never a shuffle of the
         # 10^10-row frontier. The compacted tier is read through the
-        # bucket-clustered ``frontier_index`` projection, so the scan
+        # bucket-clustered ``frontier_index`` projection (committed
+        # before the snapshot it indexes, see _compact), so the scan
         # file-skips like the seen tables; post-compaction
         # frontier_adds deltas (bounded by compact_every rounds) ride
         # along unpruned.
-        idx, _ = self.catalog.read_split("frontier_index")
-        idx_name = "frontier_index"
-        adds_comp, adds_deltas = self.catalog.read_split("frontier_adds")
-        if idx is None:
-            idx, idx_name = adds_comp, "frontier_adds"
-        parts = [p for p in (idx, adds_deltas) if p is not None]
-        if parts:
+        idx = self.catalog.read("frontier_index")
+        _, adds_deltas = self.catalog.read_split("frontier_adds")
+        if idx is not None or adds_deltas is not None:
             links = self._persist_tmp(links)
             if n_links is None:
                 # no visited table yet: same one-action fold (count +
@@ -1819,23 +1770,15 @@ class CrawlEngine:
             link_keys = links.select(
                 "site", F.col("link_url").alias("url")).distinct()
             if idx is not None:
-                parts[0] = self._pruned(idx_name, idx, link_keys, "url",
-                                        bucket_list=all_buckets)
-            cand = parts[0].select("site", "url", "counter")
-            for p in parts[1:]:
-                cand = cand.unionByName(p.select("site", "url", "counter"))
-            still_queued = cand.join(self._bc(link_keys, n_links),
-                                     ["site", "url"], "left_semi")
-            pops = self._pops_view()
-            if pops is not None:
-                pb = self._pops_rows_bound()
-                still_queued = still_queued.join(
-                    pops if pb is None else self._bc(pops, pb),
-                    ["site", "counter"], "left_anti")
+                idx = self._pruned("frontier_index", idx, link_keys, "url",
+                                   bucket_list=all_buckets)
+            cand = _union(*(p.select("site", "url", "counter")
+                            for p in (idx, adds_deltas) if p is not None))
             still_queued = (
-                still_queued
+                self._minus_pops(cand.join(self._bc(link_keys, n_links),
+                                           ["site", "url"], "left_semi"))
                 .join(self._bc(popped.select("site", "counter"),
-                               getattr(self, "_pop_bound", None)),
+                               self._pop_bound),
                       ["site", "counter"], "left_anti")
                 .select("site", F.col("url").alias("link_url")).distinct())
             links = links.join(self._bc(still_queued, n_links),
@@ -1853,13 +1796,12 @@ class CrawlEngine:
         live = self._live_frontier()
         # three independent tiny rollups — overlap their job overhead
         # on the engine pool
-        pool = self._eager_pool
-        fut_pop = pool.submit(
+        fut_pop = self._submit(
             popped.groupBy("site").agg(F.count("*").alias("n")).collect)
-        fut_live = (pool.submit(
+        fut_live = (self._submit(
             live.groupBy("site").agg(F.count("*").alias("n")).collect)
             if live is not None else None)
-        fut_pp = pool.submit(
+        fut_pp = self._submit(
             new_links.groupBy("site", "pos_in_round")
             .agg(F.count("*").alias("n")).collect)
         popped_n = {r["site"]: r["n"] for r in fut_pop.result()}
@@ -1892,10 +1834,18 @@ def _local_dim(spark: SparkSession, schema: str, **cols: list) -> DataFrame:
     return spark.createDataFrame(pd.DataFrame(cols), schema=schema)
 
 
-def _host_of(url: str) -> str:
-    from urllib.parse import urlparse
+def _latest(log: DataFrame, key: str) -> DataFrame:
+    """Latest-wins rows of an append-only log: per ``key``, the row of
+    the highest ``round``."""
+    w = Window.partitionBy(key).orderBy(F.desc("round"))
+    return (log.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1).drop("_rn"))
 
-    return urlparse(url).netloc
+
+def _union(*dfs: DataFrame | None) -> DataFrame | None:
+    """``unionByName`` of the frames that exist; None when none do."""
+    present = [df for df in dfs if df is not None]
+    return reduce(DataFrame.unionByName, present) if present else None
 
 
 def _robots_txt_of(rob: dict) -> str | None:

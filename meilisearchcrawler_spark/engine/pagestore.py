@@ -4,11 +4,11 @@ In production the fetch ``mapInPandas`` issues conditional HTTP GETs
 with per-URL retry/backoff and errors-as-data (crawler.py:971-1001
 semantics; SURVEY.md §4 "fetch UDF failure semantics"). In this
 sandbox there is no network, so the same UDF resolves URLs against a
-deterministic parquet page store instead. The store is loaded once per
+deterministic page store instead. The store is loaded once per
 executor process and memoized by path — the moral equivalent of the
 per-executor HTTP session/connection pool.
 
-The store is *lazy*: the parquet stays columnar (Arrow) with only a
+The store is *lazy*: the table stays columnar (Arrow) with only a
 url→row index built eagerly; full Python row dicts materialize on
 demand per fetched URL. Eagerly `to_pylist()`-ing an 80k-page web cost
 ~10 s and ~300 MB **per Python worker**, which dominated crawl rounds;
@@ -20,29 +20,26 @@ from __future__ import annotations
 
 
 class LazyPageStore:
-    """Prefers an mmap-ed uncompressed Arrow IPC twin
-    (``pages.feather``, written by ``fixtures.webgen.write_parquet``)
-    over the parquet file: IPC is the Arrow memory layout, so the
-    mmap-ed buffers ARE the arrays — zero per-worker materialization,
-    and every worker process shares one OS-page-cache copy. Parquet, by
-    contrast, always decodes into private worker memory; at 32 workers
-    x a 100MB+ store those private copies saturate memory bandwidth and
-    dominate the fetch stage. Parquet remains the fallback for stores
-    written before the twin existed."""
+    """Reads the mmap-ed uncompressed Arrow IPC twin of a page-store
+    parquet (``pages.feather`` beside ``pages.parquet``, written by
+    ``fixtures.webgen.write_parquet`` and ``bench_fixture``): IPC is the
+    Arrow memory layout, so the mmap-ed buffers ARE the arrays — zero
+    per-worker materialization, and every worker process shares one
+    OS-page-cache copy. Decoding the parquet instead gives every worker
+    a private copy; at 32 workers x a 100MB+ store those copies
+    saturate memory bandwidth and dominate the fetch stage. A store
+    without its twin raises ``FileNotFoundError``."""
 
     def __init__(self, path: str):
         import os
 
         import pyarrow as pa
 
-        feather = self._feather_twin(path)
-        if feather is not None and os.path.exists(feather):
-            source = pa.memory_map(feather, "r")
-            self._table = pa.ipc.open_file(source).read_all()
-        else:
-            import pyarrow.parquet as pq
-
-            self._table = pq.read_table(path)
+        feather = os.path.splitext(path)[0] + ".feather"
+        if not os.path.exists(feather):
+            raise FileNotFoundError(
+                f"page store {path!r} has no Arrow IPC twin {feather!r}")
+        self._table = pa.ipc.open_file(pa.memory_map(feather, "r")).read_all()
         self._cols = {name: self._table.column(name)
                       for name in self._table.column_names}
         self._idx = {}
@@ -51,12 +48,6 @@ class LazyPageStore:
             for u in chunk.to_pylist():
                 self._idx[u] = pos
                 pos += 1
-
-    @staticmethod
-    def _feather_twin(path: str) -> str | None:
-        if path.endswith(".parquet"):
-            return path[: -len(".parquet")] + ".feather"
-        return None
 
     def get(self, url: str) -> dict | None:
         i = self._idx.get(url)

@@ -9,10 +9,10 @@ Reference semantics (file:line into /root/reference/meilisearchcrawler/):
 * ``get_content_hash``       crawler.py:393-396 (P4)
 * language sniff             crawler.py:1040-1043 (P11)
 
-The pure-Python forms are used inside Arrow-batched pandas UDFs (and by
-the oracle). ``create_excerpt``'s stateful sentence accumulation is not
-expressible in pure Spark SQL (SURVEY.md §2.2 P9), so the vectorized UDF
-is the canonical form; ``clean_text`` gets both forms.
+These pure-Python kernels run inside the engine's Arrow-batched fetch
+UDF (and in the oracle). ``create_excerpt``'s stateful sentence
+accumulation is not expressible in pure Spark SQL (SURVEY.md §2.2 P9),
+so the kernels have no Column forms.
 """
 
 from __future__ import annotations
@@ -20,12 +20,6 @@ from __future__ import annotations
 import hashlib
 import json
 import re
-from collections.abc import Iterable
-
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 from ..config import MAX_CONTENT_LEN, MAX_EXCERPT_LEN
 
@@ -104,29 +98,3 @@ def sniff_lang(lang_attr: str | None, default: str = "fr") -> str:
         return lang_attr.split("-")[0].lower()
     return default
 
-
-# ---------------------------------------------------------------------------
-# Spark forms
-# ---------------------------------------------------------------------------
-
-
-def sniff_lang_col(lang_attr: Column, default: str = "fr") -> Column:
-    """P11 as pure Spark SQL."""
-    head = F.lower(F.split(lang_attr, "-").getItem(0))
-    return F.when(lang_attr.isNotNull() & (lang_attr != ""), head).otherwise(F.lit(default))
-
-
-@F.pandas_udf(StringType())
-def clean_text_udf(batch: pd.Series) -> pd.Series:
-    """P8 as an Arrow-batched pandas UDF."""
-    return batch.map(lambda t: clean_text(t or ""))
-
-
-@F.pandas_udf(StringType())
-def excerpt_udf(batch: pd.Series) -> pd.Series:
-    """P9 as an Arrow-batched pandas UDF."""
-    return batch.map(lambda t: create_excerpt(t or ""))
-
-
-def iter_clean(texts: Iterable[str]) -> list[str]:
-    return [clean_text(t) for t in texts]

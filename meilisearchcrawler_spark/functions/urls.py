@@ -7,9 +7,11 @@ Reference semantics (file:line into /root/reference/meilisearchcrawler/):
   rstrip path '/', drop fragment, keep query)
 * ``generate_doc_id``    crawler.py:470-471  (P3: md5 hex of URL)
 * ``is_valid_url``       crawler.py:490-499  (F6)
-* ``is_same_domain``     crawler.py:480-481  (F7)
 * ``is_excluded``        crawler.py:484-487  (F3: substring match)
 * extension skip         crawler.py:1168-1173 (F4)
+
+F7 (same-domain) and link ``urljoin`` are applied inline by
+``html.extract_links``.
 
 The two hash domains are kept distinct (SURVEY.md §7 hard part 5):
 doc ids key the *raw* (post-redirect) URL, merge-side dedup keys the
@@ -21,7 +23,7 @@ scale; the reference keys raw strings in SQLite).
 from __future__ import annotations
 
 import hashlib
-from urllib.parse import urljoin, urlparse
+from urllib.parse import urlparse
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -100,11 +102,6 @@ def _url_meta(url: str) -> tuple[bool, str]:
     return meta
 
 
-def is_same_domain(url1: str, url2: str) -> bool:
-    """F7. crawler.py:480-481."""
-    return urlparse(url1).netloc == urlparse(url2).netloc
-
-
 def is_excluded(url: str, patterns: list[str]) -> bool:
     """F3. crawler.py:484-487 — plain substring containment."""
     if not patterns:
@@ -119,12 +116,6 @@ def has_ignored_extension(url: str) -> bool:
 
 def url_host(url: str) -> str:
     return urlparse(url).netloc
-
-
-def join_and_normalize(base_url: str, href: str) -> str:
-    """Link assembly at discovery time: ``normalize_url(urljoin(...))``
-    (crawler.py:1066-1070)."""
-    return normalize_url(urljoin(base_url, href))
 
 
 # ---------------------------------------------------------------------------

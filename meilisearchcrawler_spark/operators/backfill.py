@@ -26,10 +26,8 @@ unique).
 
 from __future__ import annotations
 
-import json
 from typing import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 

@@ -225,34 +225,3 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     return (ex.groupBy(id_col).agg(*votes)
             .selectExpr(id_col, f"CAST({fp} AS BIGINT) AS simhash"))
 
-
-def simhash_near_pairs(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", bits: int = 16,
-                       max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ k, using the
-    standard block-permutation trick: split the fingerprint into
-    ``max_hamming + 1`` blocks — any pair within distance k agrees on
-    at least one block, so join on (block_id, block_value) then filter
-    by exact ``bit_count(xor)``. Avoids the n² cross join."""
-    fps = simhash(df, text_col, id_col, bits)
-    nblocks = max_hamming + 1
-    width = bits // nblocks
-    blocks = [
-        F.struct(F.lit(bi).alias("block_id"),
-                 F.shiftrightunsigned(F.col("simhash"), bi * width)
-                 .bitwiseAND(F.lit((1 << width) - 1)).alias("block_val"))
-        for bi in range(nblocks)
-    ]
-    blocked = fps.select(id_col, "simhash", F.explode(F.array(*blocks)).alias("b")) \
-                 .select(id_col, "simhash", "b.block_id", "b.block_val")
-    a, b = blocked.alias("a"), blocked.alias("b")
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (
-        a.join(b, (F.col("a.block_id") == F.col("b.block_id"))
-               & (F.col("a.block_val") == F.col("b.block_val"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .filter(ham <= max_hamming)
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"),
-                ham.alias("hamming"))
-        .distinct()
-    )

@@ -32,12 +32,6 @@ def token_count(text: Column) -> Column:
     return F.size(words_col(text))
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """BPE-ish proxy: count GPT-2-style pretokenizer matches —
-    word pieces, numbers, punctuation runs."""
-    return F.regexp_count(text, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"))
-
-
 def stopword_hits(text: Column, lang: str) -> Column:
     sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
     return F.size(F.array_intersect(words_col(text), sw))

@@ -29,7 +29,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--catalog", help="checkpoint catalog root dir")
-    ap.add_argument("--pages", help="page-store parquet (the fetch 'network')")
+    ap.add_argument("--pages", help="page-store parquet (the fetch 'network'); "
+                    "its Arrow IPC twin (.feather) must sit beside it")
     ap.add_argument("--seeds", help="seeds JSON file (list of site configs)")
     ap.add_argument("--robots", help="robots JSON file")
     ap.add_argument("--round-budget", type=int, default=1024)
