@@ -41,8 +41,7 @@ _IVF_ITERS = 1     # Lloyd refinements over the training sample
 # and immutable. The cached object is a lazy plan handle (file list +
 # schema), NOT data: every action over it still scans the parquet
 # files in full, so nothing is precomputed or replayed across runs —
-# this is the session-level analog of Spark's own FileIndex caching
-# (the engine catalog applies the same policy to its own tables).
+# this is the session-level analog of Spark's own FileIndex caching.
 # Keyed per Spark application id so a fresh session never reuses stale
 # JVM handles (an ``id()`` of a stopped context can be reused by the
 # next context object; an application id never is).

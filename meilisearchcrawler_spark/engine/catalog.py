@@ -25,7 +25,10 @@ import os
 import shutil
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 
 def _compacted(rels) -> list:
@@ -41,28 +44,34 @@ class CheckpointCatalog:
         self._manifest_path = os.path.join(root, "manifest.json")
         self.manifest = self._load()
         self._bytes_cache: dict = {}
-        # lazy-DataFrame handle cache keyed by the exact rel-path set.
-        # Staged dirs are immutable once written, so a given path tuple
-        # always denotes identical content — reusing the handle skips
-        # the per-call spark.read.parquet cost (driver-side file
-        # listing + footer schema inference), which the engine
-        # otherwise pays ~10× per round over a dir set that grows
-        # every round. Pure metadata caching: every action over the
-        # handle still scans the parquet files. Grouped per table: a
-        # commit that adds deltas to a table evicts that table's
-        # handles except the one over its compacted snapshot (whose
-        # path set the commit did not change), so the cache stays
-        # O(tables) even when nothing ever compacts.
-        self._df_cache: dict[str, dict[tuple[str, ...], DataFrame]] = {}
+        # read handles since the last manifest commit, keyed by the
+        # exact rel-path set (staged dirs are immutable, so a path set
+        # always denotes the same content). A round repeats ~3-14 of
+        # its reads, and once a read spans more than 32 dirs Spark
+        # lists them with a parallel job (a crawl without compaction
+        # gets there); the handle is a lazy plan, every action over it
+        # still scans the files.
+        self._handles: dict[tuple[str, tuple[str, ...]], DataFrame] = {}
 
-    def _read_paths(self, table: str, rels) -> DataFrame:
-        cache = self._df_cache.setdefault(table, {})
-        key = tuple(rels)
-        df = cache.get(key)
+    def _read_paths(self, table: str, rels) -> DataFrame | None:
+        """A lazy read over ``rels`` (None when there are none). The
+        schema comes from the footer of the file Spark's own inference
+        would open (the first path in sorted order; ``mergeSchema`` is
+        off) read driver-side with pyarrow, so no inference job runs.
+        Every dir the catalog writes holds at least one part file,
+        even for an empty frame."""
+        if not rels:
+            return None
+        key = (table, tuple(rels))
+        df = self._handles.get(key)
         if df is None:
-            df = self.spark.read.parquet(
+            first = os.path.join(self.root, min(rels))
+            part = min(f for f in os.listdir(first) if f.endswith(".parquet"))
+            schema = from_arrow_schema(
+                pq.read_schema(os.path.join(first, part)))
+            df = self.spark.read.schema(schema).parquet(
                 *[os.path.join(self.root, r) for r in rels])
-            cache[key] = df
+            self._handles[key] = df
         return df
 
     # -- manifest ---------------------------------------------------------
@@ -78,6 +87,7 @@ class CheckpointCatalog:
         with open(tmp, "w") as f:
             json.dump(self.manifest, f, indent=1, sort_keys=True)
         os.replace(tmp, self._manifest_path)
+        self._handles.clear()
 
     # -- staged writes ----------------------------------------------------
 
@@ -103,12 +113,10 @@ class CheckpointCatalog:
         the metrics rollup as a Python list; a distributed write job
         for ~40 rows costs more scheduling than the data (round-5
         action profile: ~0.5-1 s apiece at the frontier10m harness).
-        ``schema`` is a
-        ``pyarrow.Schema`` matching what ``spark.read.parquet`` must
-        union with the table's Spark-written deltas."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
+        ``schema`` is a ``pyarrow.Schema`` with the columns and types
+        of the table's Spark-written deltas: when this dir sorts first
+        in a read, its footer is the schema of the whole read. An
+        empty ``rows`` still writes the file."""
         rel = os.path.join(table, f"r{round_no:06d}_{uuid.uuid4().hex[:8]}")
         path = os.path.join(self.root, rel)
         os.makedirs(path, exist_ok=True)
@@ -123,11 +131,6 @@ class CheckpointCatalog:
         for table, rels in staged.items():
             current = self.manifest["tables"].setdefault(table, [])
             current.extend(rels)
-            if rels and table in self._df_cache:
-                snap = tuple(_compacted(current))
-                self._df_cache[table] = {
-                    k: df for k, df in self._df_cache[table].items()
-                    if k == snap}
         self.manifest["state"] = state
         self.manifest["committed_round"] = round_no
         self._commit_manifest()
@@ -138,10 +141,7 @@ class CheckpointCatalog:
         return bool(self.manifest["tables"].get(table))
 
     def read(self, table: str) -> DataFrame | None:
-        rels = self.manifest["tables"].get(table)
-        if not rels:
-            return None
-        return self._read_paths(table, rels)
+        return self._read_paths(table, self.manifest["tables"].get(table))
 
     def read_split(self, table: str) -> tuple[DataFrame | None, DataFrame | None]:
         """``(compacted snapshot, post-compaction deltas)`` — readers
@@ -152,46 +152,21 @@ class CheckpointCatalog:
         rels = self.manifest["tables"].get(table) or []
         comp = _compacted(rels)
         rest = [r for r in rels if r not in comp]
+        return self._read_paths(table, comp), self._read_paths(table, rest)
 
-        def _read(rs):
-            if not rs:
-                return None
-            return self._read_paths(table, rs)
-
-        return _read(comp), _read(rest)
-
-    def read_since(self, table: str, floor_round: int,
-                   include_compacted: bool = True) -> DataFrame | None:
+    def read_since(self, table: str, floor_round: int) -> DataFrame | None:
         """Read only the delta dirs of ``table`` staged for rounds
         AFTER ``floor_round``. The round number rides in every delta
         dir name (``r{round:06d}_…``), so the pruning happens on the
         manifest's file list, driver-side, before any parquet footer
         is opened — the Iceberg snapshot-range (incremental-read)
-        analog. Compacted snapshots carry no round tag; by default they
-        are included (callers reading monotonic never-compacted logs
-        get a safe superset even if one appears), pass
-        ``include_compacted=False`` when a compacted snapshot is NOT a
-        valid delta source (e.g. latest-wins folds that drop history
-        rows)."""
-        rels = self.manifest["tables"].get(table)
-        if not rels:
-            return None
-        keep = []
-        for r in rels:
-            base = os.path.basename(r)
-            if base.startswith("compact_"):
-                if not include_compacted:
-                    continue
-            elif base.startswith("r"):
-                try:
-                    if int(base[1:base.index("_")]) <= floor_round:
-                        continue
-                except ValueError:
-                    pass
-            keep.append(r)
-        if not keep:
-            return None
-        return self._read_paths(table, keep)
+        analog. A compacted snapshot is never a delta source (a
+        latest-wins fold drops history rows), so it is never read."""
+        rels = self.manifest["tables"].get(table) or []
+        comp = _compacted(rels)
+        return self._read_paths(table, [
+            r for r in rels if r not in comp
+            and int(os.path.basename(r)[1:].split("_")[0]) > floor_round])
 
     @property
     def meta(self) -> dict:
@@ -278,8 +253,6 @@ class CheckpointCatalog:
         self._commit_manifest()
         for r in old:
             shutil.rmtree(os.path.join(self.root, r), ignore_errors=True)
-        # the superseded dirs are gone: so must be their read handles
-        self._df_cache.pop(table, None)
 
     def drop(self, table: str) -> None:
         """Atomically unpublish ``table``, then delete its dirs (a
@@ -288,9 +261,3 @@ class CheckpointCatalog:
         self._commit_manifest()
         for r in old:
             shutil.rmtree(os.path.join(self.root, r), ignore_errors=True)
-        self._df_cache.pop(table, None)
-
-    def blob_dir(self, name: str) -> str:
-        path = os.path.join(self.root, "blobs", name)
-        os.makedirs(path, exist_ok=True)
-        return path

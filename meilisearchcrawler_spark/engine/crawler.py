@@ -544,8 +544,7 @@ class CrawlEngine:
         spans only the latter, crawler.py:441-447 seeding, F10)."""
         comp = self.catalog.read(table)
         floor = self.catalog.meta.get(floor_key, -1)
-        log = self.catalog.read_since(log_table, floor,
-                                      include_compacted=False)
+        log = self.catalog.read_since(log_table, floor)
         if log is not None:
             log = log.filter(F.col("round") > F.lit(floor))
             if keep is not None:

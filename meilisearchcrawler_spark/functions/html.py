@@ -365,12 +365,6 @@ def get_lang_attr(html: str) -> str | None:
     return parse_attrs(m.group(1)).get("lang")
 
 
-class ImageRef(NamedTuple):
-    url: str
-    alt: str
-    description: str
-
-
 def extract_images(html: str, base_url: str, max_images: int = 5) -> list[dict]:
     """P10 (crawler.py:604-628): ``src|data-src|data-lazy-src``, skip
     declared w/h < 100, absolutize, validity gate, URL-dedup, cap;

@@ -61,10 +61,6 @@ class CrawlResult:
     visited: set[str] = field(default_factory=set)
     stats: dict[str, int] = field(default_factory=dict)
 
-    def admitted_sequence(self) -> list[tuple[int, int, str]]:
-        return [(r["round"], r["pos_in_round"], r["url"])
-                for r in self.crawl_log if r["action"] == "admitted"]
-
 
 def crawl_site(fixture: WebFixture, site: dict, *, batch_size: int = 2,
                max_pages: int = 0, max_rounds: int | None = None,

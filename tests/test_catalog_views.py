@@ -13,16 +13,17 @@ import pyarrow as pa
 
 from meilisearchcrawler_spark.engine.catalog import CheckpointCatalog
 
+_LOG_SCHEMA = pa.schema([("site", pa.string()), ("counter", pa.int64()),
+                         ("round", pa.int32())])
+
 
 def _catalog_with_rounds(spark, tmp_path, rounds: list[int]) -> CheckpointCatalog:
     cat = CheckpointCatalog(spark, str(tmp_path / "cat"))
-    schema = pa.schema([("site", pa.string()), ("counter", pa.int64()),
-                        ("round", pa.int32())])
     staged: dict[str, list[str]] = {}
     for r in rounds:
         rel = cat.stage_rows(
             "crawl_log",
-            [{"site": "s", "counter": 10 * r, "round": r}], schema, r)
+            [{"site": "s", "counter": 10 * r, "round": r}], _LOG_SCHEMA, r)
         staged.setdefault("crawl_log", []).append(rel)
     cat.commit_round(max(rounds), staged, {})
     return cat
@@ -50,15 +51,15 @@ class TestReadSince:
     def test_compacted_snapshot_inclusion_flag(self, spark, tmp_path):
         cat = _catalog_with_rounds(spark, tmp_path, [0, 1, 2])
         cat.compact("crawl_log")
-        # the fold replaced every r*-dir with one compact_ dir: with
-        # inclusion (the default) a high floor still reads the
-        # snapshot (safe superset for membership anti-joins) ...
-        assert cat.read_since("crawl_log", 2).count() == 3
-        # ... and with include_compacted=False nothing survives — the
-        # content_hashes view uses this because a latest-wins snapshot
-        # is not a valid hash-history delta source
-        assert cat.read_since("crawl_log", 2,
-                              include_compacted=False) is None
+        # the fold replaced every r*-dir with one compact_ dir, which is
+        # never a delta source (a latest-wins snapshot drops history
+        # rows): no floor reads it
+        assert cat.read_since("crawl_log", -1) is None
+        rel = cat.stage_rows("crawl_log", [{"site": "s", "counter": 30,
+                                            "round": 3}], _LOG_SCHEMA, 3)
+        cat.commit_round(3, {"crawl_log": [rel]}, {})
+        assert [r["round"] for r in
+                cat.read_since("crawl_log", -1).collect()] == [3]
 
 
 class TestDerivedViews:
@@ -162,10 +163,10 @@ class TestPreparedCompaction:
 class TestReadHandleCache:
     def test_cache_bounded_by_tables_without_compaction(self, spark,
                                                         tmp_path):
-        """With ``compact_every`` unset nothing clears the read-handle
-        cache at compaction: each commit must evict the handles of the
-        tables whose path set it changed, or the cache gains one
-        JVM-pinned handle per table per round."""
+        """Read handles live from one manifest commit to the next: a
+        repeated read between commits reuses its handle, and every
+        commit empties the cache, so it never outgrows one round's
+        reads even when nothing ever compacts."""
         cat = CheckpointCatalog(spark, str(tmp_path / "cat"))
         schema = pa.schema([("site", pa.string()), ("round", pa.int32())])
         tables = ("crawl_log", "url_seen_log")
@@ -174,31 +175,53 @@ class TestReadHandleCache:
                                          schema, r)]
                       for t in tables}
             cat.commit_round(r, staged, {})
+            assert not cat._handles
             handles = [cat.read(t) for t in tables]
-            assert sum(len(c) for c in cat._df_cache.values()) <= len(tables)
-            # a commit that leaves a table's path set alone keeps its
-            # handle
-            cat.commit_round(r, {"crawl_log": []}, {})
-            assert cat.read("crawl_log") is handles[0]
+            assert all(cat.read(t) is h for t, h in zip(tables, handles))
+            assert len(cat._handles) == len(tables)
+        cat.commit_round(12, {"crawl_log": []}, {})
+        assert not cat._handles
         assert handles[0].count() == 12
 
-    def test_commit_keeps_compacted_snapshot_handle(self, spark, tmp_path):
-        """A commit that adds deltas to a compacted table keeps the
-        snapshot's handle (its path set is unchanged) and evicts the
-        rest."""
+
+class TestFooterSchema:
+    def test_reads_run_no_job_and_match_inferred_schema(self, spark,
+                                                       tmp_path):
+        """``read``, ``read_split`` and ``read_since`` take the schema
+        from a parquet footer on the driver: building the handle runs no
+        Spark job, and the schema equals what Spark infers from the same
+        dirs, for a nested Spark-written delta, a pyarrow ``stage_rows``
+        delta, an empty Spark-written delta and a compacted snapshot."""
         cat = CheckpointCatalog(spark, str(tmp_path / "cat"))
-        schema = pa.schema([("site", pa.string()), ("round", pa.int32())])
-        cat.commit_round(0, {"crawl_log": [cat.stage_rows(
-            "crawl_log", [{"site": "s", "round": 0}], schema, 0)]}, {})
-        cat.compact("crawl_log", cat.read("crawl_log"))
-        for r in range(1, 4):
-            cat.commit_round(r, {"crawl_log": [cat.stage_rows(
-                "crawl_log", [{"site": "s", "round": r}], schema, r)]}, {})
-            snap, _ = cat.read_split("crawl_log")
-            full = cat.read("crawl_log")
-            assert len(cat._df_cache["crawl_log"]) == 3
-        cat.commit_round(4, {"crawl_log": [cat.stage_rows(
-            "crawl_log", [{"site": "s", "round": 4}], schema, 4)]}, {})
-        assert list(cat._df_cache["crawl_log"].values()) == [snap]
-        assert cat.read_split("crawl_log")[0] is snap
-        assert full.count() == 4 and cat.read("crawl_log").count() == 5
+        nested = spark.range(3).selectExpr(
+            "cast(id as string) as url", "cast(id as int) as round",
+            "array(named_struct('src', cast(id as string), 'w', id)) "
+            "as images")
+        staged = {
+            "documents": [cat.stage("documents", nested, 0)],
+            "crawl_log": [cat.stage_rows(
+                "crawl_log", [{"site": "s", "counter": 1, "round": 0}],
+                _LOG_SCHEMA, 0)],
+            "frontier_adds": [cat.stage(
+                "frontier_adds", nested.filter("round < 0"), 0)],
+            "visited": [cat.stage("visited", nested.select("url", "round"),
+                                  0)],
+        }
+        cat.commit_round(0, staged, {})
+        cat.compact("visited")
+        cat.commit_round(1, {"visited": [cat.stage(
+            "visited", nested.select("url", "round"), 1)]}, {})
+
+        tracker = spark.sparkContext.statusTracker()
+        before = set(tracker.getJobIdsForGroup(None))
+        frames = []
+        for table in staged:
+            frames += [cat.read(table), *cat.read_split(table),
+                       cat.read_since(table, -1)]
+        assert set(tracker.getJobIdsForGroup(None)) == before
+        assert cat.read_split("visited")[0] is not None
+
+        for df in filter(None, frames):
+            inferred = spark.read.parquet(*df.inputFiles())
+            assert ([(f.name, f.dataType) for f in df.schema]
+                    == [(f.name, f.dataType) for f in inferred.schema])

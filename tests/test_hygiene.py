@@ -1,6 +1,8 @@
-"""Source hygiene: no package module imports a name it never uses.
+"""Source hygiene: no package module imports a name it never uses, and
+every function, class and method the package defines is named
+somewhere else in the repository.
 
-A stdlib-``ast`` check (no Spark, no linter dependency). A name counts
+Stdlib-``ast`` checks (no Spark, no linter dependency). A name counts
 as used when it appears as a ``Name`` anywhere in the module, as the
 root of an attribute chain, inside a string annotation
 (``raw: "DataFrame"``), or in ``__all__``.
@@ -9,7 +11,9 @@ root of an attribute chain, inside a string annotation
 from __future__ import annotations
 
 import ast
+import collections
 import os
+import re
 
 import pytest
 
@@ -99,3 +103,58 @@ def test_unused_import_check_sees_string_annotations():
                          ids=lambda p: os.path.relpath(p, ROOT))
 def test_no_unused_imports(path):
     assert unused_imports(path) == []
+
+
+def _repo_sources() -> list[str]:
+    """Every ``.py`` file of the repository, minus ``bench_runs/``
+    (run records) and hidden dirs."""
+    out = []
+    for dirpath, dirs, files in os.walk(ROOT):
+        dirs[:] = [d for d in dirs
+                   if not d.startswith(".") and d != "bench_runs"]
+        out += [os.path.join(dirpath, f) for f in files if f.endswith(".py")]
+    return out
+
+
+def unnamed_definitions(pkg_modules: list[str], sources: list[str]) -> list[str]:
+    """Functions, classes and methods defined in ``pkg_modules`` whose
+    name occurs as a whole word in ``sources`` no more often than it is
+    defined. Dunder methods are called by the language, not by name."""
+    words: collections.Counter = collections.Counter()
+    for path in sources:
+        with open(path) as f:
+            words.update(re.findall(r"\w+", f.read()))
+    defs = []
+    for path in pkg_modules:
+        with open(path) as f:
+            tree = ast.parse(f.read(), filename=path)
+        defs += [(os.path.relpath(path, ROOT), node.lineno, node.name)
+                 for node in ast.walk(tree)
+                 if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                      ast.ClassDef))
+                 and not (node.name.startswith("__")
+                          and node.name.endswith("__"))]
+    n_defs = collections.Counter(name for _, _, name in defs)
+    return [f"{path}:{line}: {name}" for path, line, name in sorted(defs)
+            if words[name] <= n_defs[name]]
+
+
+def test_unnamed_definition_check_counts_other_mentions(tmp_path):
+    mod = tmp_path / "m.py"
+    mod.write_text("class A:\n"
+                   "    def used(self):\n"
+                   "        return self.dead_twin\n"
+                   "    def dead(self):\n"
+                   "        pass\n"
+                   "    def __len__(self):\n"
+                   "        return 0\n"
+                   "def A2():\n"
+                   "    return A().used()\n")
+    got = unnamed_definitions([str(mod)], [str(mod)])
+    assert [g.split(": ")[1] for g in got] == ["dead", "A2"]
+
+
+def test_every_package_definition_is_named_elsewhere():
+    pkg = [p for p in _modules()
+           if p.startswith(os.path.join(ROOT, "meilisearchcrawler_spark"))]
+    assert unnamed_definitions(pkg, _repo_sources()) == []

@@ -92,7 +92,7 @@ def test_failed_staged_write_leaves_engine_unchanged(spark, tmp_path,
 # visited set or content history to probe yet); rounds 1-5 are steady;
 # round 6 finds every tracked frontier empty and retires both sites
 # before any job.
-_ROUND_JOBS_MAX = [33, 51, 51, 51, 51, 51]
+_ROUND_JOBS_MAX = [31, 48, 48, 48, 48, 48]
 _DRAINED_ROUND_JOBS = 0
 
 
