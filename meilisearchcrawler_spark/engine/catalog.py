@@ -12,7 +12,9 @@ one Iceberg transaction per round (``MERGE INTO url_seen`` +
 cache_db.py:67-81 and resume-state save crawler.py:1221-1224).
 
 Table reads union all committed deltas; ``compact()`` folds a table's
-deltas into one snapshot directory (Iceberg's rewrite_data_files).
+deltas into one snapshot directory (Iceberg's rewrite_data_files), and
+``commit_compact(keep=…)`` can leave chosen deltas beside it by
+reference.
 Scalar state (counters, round number) rides in the manifest itself, so
 state and data commit in the same atomic step — the property that makes
 kill-resume bit-identical.
@@ -36,6 +38,29 @@ def _compacted(rels) -> list:
     return [r for r in rels if os.path.basename(r).startswith("compact_")]
 
 
+def column_ranges(path: str, column: str) -> tuple[int, list]:
+    """``(bytes, ranges)`` of the parquet dir at ``path``, from its
+    footers alone (pyarrow on the driver, no Spark job): the dir's
+    parquet bytes, and one ``(min, max)`` of ``column`` per non-empty
+    row group, or None for a row group written without statistics."""
+    size, ranges = 0, []
+    for f in sorted(os.listdir(path)):
+        if not f.endswith(".parquet"):
+            continue
+        full = os.path.join(path, f)
+        size += os.path.getsize(full)
+        md = pq.read_metadata(full)
+        idx = md.schema.to_arrow_schema().get_field_index(column)
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            if rg.num_rows == 0:
+                continue
+            st = rg.column(idx).statistics
+            ranges.append((st.min, st.max)
+                          if st is not None and st.has_min_max else None)
+    return size, ranges
+
+
 class CheckpointCatalog:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -53,7 +78,7 @@ class CheckpointCatalog:
         # still scans the files.
         self._handles: dict[tuple[str, tuple[str, ...]], DataFrame] = {}
 
-    def _read_paths(self, table: str, rels) -> DataFrame | None:
+    def read_rels(self, table: str, rels) -> DataFrame | None:
         """A lazy read over ``rels`` (None when there are none). The
         schema comes from the footer of the file Spark's own inference
         would open (the first path in sorted order; ``mergeSchema`` is
@@ -137,36 +162,44 @@ class CheckpointCatalog:
 
     # -- reads ------------------------------------------------------------
 
+    def rels(self, table: str) -> list[str]:
+        """``table``'s committed dir paths, relative to the root."""
+        return self.manifest["tables"].get(table) or []
+
     def exists(self, table: str) -> bool:
-        return bool(self.manifest["tables"].get(table))
+        return bool(self.rels(table))
 
     def read(self, table: str) -> DataFrame | None:
-        return self._read_paths(table, self.manifest["tables"].get(table))
+        return self.read_rels(table, self.rels(table))
 
     def read_split(self, table: str) -> tuple[DataFrame | None, DataFrame | None]:
-        """``(compacted snapshot, post-compaction deltas)`` — readers
-        that apply stats-pruned predicates to the clustered snapshot
-        (frontier depth-band / bucket layouts) read the two tiers
-        separately; deltas since the last compaction are bounded by
-        ``compact_every`` rounds and scanned as-is."""
-        rels = self.manifest["tables"].get(table) or []
+        """``(compacted snapshot, deltas)`` — readers that apply
+        stats-pruned predicates to the clustered snapshot (frontier
+        depth-band / bucket layouts) read the two tiers separately.
+        The deltas are every dir the last compaction did not rewrite:
+        the ones staged since, and any it kept by reference (see
+        :meth:`commit_compact`)."""
+        rels = self.rels(table)
         comp = _compacted(rels)
         rest = [r for r in rels if r not in comp]
-        return self._read_paths(table, comp), self._read_paths(table, rest)
+        return self.read_rels(table, comp), self.read_rels(table, rest)
+
+    def rels_since(self, table: str, floor_round: int) -> list[str]:
+        """The delta dirs of ``table`` staged for rounds AFTER
+        ``floor_round``. The round number rides in every delta dir name
+        (``r{round:06d}_…``), so the pruning happens on the manifest's
+        file list, driver-side, before any parquet footer is opened —
+        the Iceberg snapshot-range (incremental-read) analog. A
+        compacted snapshot is never a delta source (a latest-wins fold
+        drops history rows), so it is never listed."""
+        rels = self.rels(table)
+        comp = _compacted(rels)
+        return [r for r in rels if r not in comp
+                and int(os.path.basename(r)[1:].split("_")[0]) > floor_round]
 
     def read_since(self, table: str, floor_round: int) -> DataFrame | None:
-        """Read only the delta dirs of ``table`` staged for rounds
-        AFTER ``floor_round``. The round number rides in every delta
-        dir name (``r{round:06d}_…``), so the pruning happens on the
-        manifest's file list, driver-side, before any parquet footer
-        is opened — the Iceberg snapshot-range (incremental-read)
-        analog. A compacted snapshot is never a delta source (a
-        latest-wins fold drops history rows), so it is never read."""
-        rels = self.manifest["tables"].get(table) or []
-        comp = _compacted(rels)
-        return self._read_paths(table, [
-            r for r in rels if r not in comp
-            and int(os.path.basename(r)[1:].split("_")[0]) > floor_round])
+        """A read over :meth:`rels_since`."""
+        return self.read_rels(table, self.rels_since(table, floor_round))
 
     @property
     def meta(self) -> dict:
@@ -183,7 +216,7 @@ class CheckpointCatalog:
         committed round: a table that gained no files between commits
         reuses its cached size instead of re-walking O(total files)
         every round."""
-        rels = tuple(self.manifest["tables"].get(table) or ())
+        rels = tuple(self.rels(table))
         cached = self._bytes_cache.get(table)
         if cached is not None and cached[0] == rels:
             return cached[1]
@@ -240,12 +273,14 @@ class CheckpointCatalog:
 
     def commit_compact(self, table: str, rel: str,
                        meta: dict | None = None,
-                       state: dict | None = None) -> None:
-        """Atomically publish a prepared snapshot as ``table``'s sole
-        content (+ optional ``meta``/``state`` in the same manifest
-        write), then drop the superseded delta dirs."""
-        old = self.manifest["tables"].get(table, [])
-        self.manifest["tables"][table] = [rel]
+                       state: dict | None = None,
+                       keep: list[str] = ()) -> None:
+        """Atomically publish a prepared snapshot as ``table``'s content
+        together with the ``keep`` dirs, which stay by reference (+
+        optional ``meta``/``state`` in the same manifest write), then
+        drop every other superseded dir."""
+        old = [r for r in self.rels(table) if r not in keep]
+        self.manifest["tables"][table] = [rel, *keep]
         if meta:
             self.manifest.setdefault("meta", {}).update(meta)
         if state is not None:

@@ -46,10 +46,14 @@ Scale notes (10^10 frontier, 1000 executors):
   manifest turns the per-site need into a pushed
   ``depth > g OR (depth = g AND counter <= c)`` predicate, so the scan
   file-skips to ~sites × prefix_k rows regardless of frontier size
-  (:func:`pop_cutoff`). The full frontier is only touched by the
-  adds⟂pops anti-join (hash-partitioned on counter) and periodic
-  compaction; the link-dedup membership scan reads the bucket-clustered
-  ``frontier_index`` projection instead (bucket-pruned like url_seen).
+  (:func:`pop_cutoff`); the same cut file-skips the deltas of every
+  site the histogram covers. Compaction rewrites only the frontier
+  rows a pop may have touched: a delta no pop can have reached (a bulk
+  load) stays by reference (:func:`carried_deltas`). The link-dedup
+  membership scan reads, once the frontier reaches
+  ``prune_min_bytes``, the bucket-clustered ``frontier_index``
+  projection (bucket-pruned like url_seen); below it, the frontier
+  itself.
 * NO per-round operation touches a corpus-sized table with a shuffle,
   window, or distinct. url_seen conditional-header/cache lookups are
   key-pruned (``_seen_for``): bucket-filtered file-skipping scan →
@@ -72,6 +76,7 @@ Scale notes (10^10 frontier, 1000 executors):
 from __future__ import annotations
 
 import json
+import os
 from concurrent.futures import ThreadPoolExecutor, wait
 from contextlib import contextmanager
 from dataclasses import dataclass
@@ -106,7 +111,7 @@ from ..functions.urls import (
 from .bloom import (
     BITS_PER_PARTITION, NUM_HASHES, NUM_PARTITIONS, bitmap_delta, check_hashes,
 )
-from .catalog import CheckpointCatalog
+from .catalog import CheckpointCatalog, _compacted, column_ranges
 from .pagestore import load_store
 
 FETCH_SCHEMA = StructType([
@@ -250,6 +255,49 @@ def pop_cutoff(hist: dict | None,
     # the union of per-site needs is covered by (min g, max c at min
     # g): sites with deeper g_s sit entirely inside depth > g
     return g_min, c_at[g_min]
+
+
+def carried_deltas(root: str, rels: list[str],
+                   pop_rels: list[str]) -> list[str]:
+    """The ``frontier_adds`` delta dirs among ``rels`` that a compaction
+    keeps by reference instead of rewriting, decided from parquet
+    footers alone (no Spark job). ``pop_rels`` are the ``crawl_log``
+    dirs after the pops floor: their rows are the pops the compaction
+    applies. A non-empty delta is carried when
+
+    * no row group's ``counter`` [min, max] meets that of any pop row
+      group — no pop can have touched it (conservative across sites),
+      so folding it would apply nothing and, below the prune floor,
+      gain no layout; and
+    * its bytes are at least those of everything else the compaction
+      would fold, checked from the largest candidate down — so every
+      carried delta outweighs all it is carried beside, and the number
+      of carried dirs every frontier read lists stays logarithmic in
+      the frontier's bytes.
+    """
+    pops = [rg for r in pop_rels
+            for rg in column_ranges(os.path.join(root, r), "counter")[1]]
+    stats = {r: column_ranges(os.path.join(root, r), "counter")
+             for r in rels}
+
+    def untouched(ranges) -> bool:
+        return all(rg is not None and all(
+            p is not None and (p[1] < rg[0] or rg[1] < p[0]) for p in pops)
+            for rg in ranges)
+
+    snapshots = _compacted(rels)
+    cands = sorted((r for r in rels if r not in snapshots
+                    and stats[r][1] and untouched(stats[r][1])),
+                   key=lambda r: (-stats[r][0], r))
+    fold = sum(size for size, _ in stats.values())
+    carried = []
+    for r in cands:
+        size = stats[r][0]
+        if size < fold - size:
+            break
+        carried.append(r)
+        fold -= size
+    return carried
 
 
 def _make_fetch_udf(store_path: str, site_cfg_bc):
@@ -602,25 +650,36 @@ class CrawlEngine:
 
     def _pop_frontier(self, budgets: dict[str, int],
                       prefix_k: int) -> DataFrame | None:
-        """Live-frontier view for pop selection, with the compacted
-        snapshot pruned by the histogram cutoff — the predicate pushes
-        to the parquet scan and the depth/counter-clustered layout
-        skips every file outside the deepest band, so the per-round
-        candidate scan tracks sites × prefix_k, not the frontier size
-        (the round-3 verdict's last unbounded-growth term). Deltas
-        since compaction are bounded by ``compact_every`` rounds and
-        read whole."""
+        """Live-frontier view for pop selection, pruned by the
+        histogram cutoff — the predicate pushes to the parquet scan and
+        the depth/counter-clustered snapshot skips every file outside
+        the deepest band, so the per-round candidate scan tracks
+        sites × prefix_k, not the frontier size (the round-3 verdict's
+        last unbounded-growth term).
+
+        The cut applies to the deltas too (staged since the compaction,
+        or carried by it), for every site the histogram covers: the
+        snapshot holds ≥ ``prefix_k + pops_since_compact`` of the
+        site's rows at or above the cut, at most ``pops_since_compact``
+        of them are popped, so ≥ ``prefix_k`` live rows outrank every
+        row below it. A carried delta below the cut is then
+        file-skipped like the snapshot. Sites without histogram rows
+        keep every delta row (:func:`pop_cutoff` skips them)."""
         comp, deltas = self.catalog.read_split("frontier_adds")
-        if comp is not None:
-            cut = pop_cutoff(
-                self.catalog.meta.get("frontier_hist"),
-                {s: prefix_k + self.sites[s].pops_since_compact
-                 for s in budgets})
-            if cut is not None:
-                g, c = cut
-                comp = comp.filter(
-                    (F.col("depth") > g)
+        hist = self.catalog.meta.get("frontier_hist")
+        cut = None if comp is None else pop_cutoff(
+            hist, {s: prefix_k + self.sites[s].pops_since_compact
+                   for s in budgets})
+        if cut is not None:
+            g, c = cut
+            keep = ((F.col("depth") > g)
                     | ((F.col("depth") == g) & (F.col("counter") <= c)))
+            comp = comp.filter(keep)
+            uncovered = [s for s in budgets if not hist.get(s)]
+            if uncovered:
+                keep = keep | F.col("site").isin(uncovered)
+            if deltas is not None:
+                deltas = deltas.filter(keep)
         adds = _union(comp, deltas)
         if adds is None:
             return None
@@ -1558,8 +1617,9 @@ class CrawlEngine:
                 .sortWithinPartitions("bucket", order_key))
 
     def _compact(self) -> None:
-        """Fold hot-table deltas: frontier becomes its live view (pops
-        applied), url_seen its latest-wins view, visited/content_hashes
+        """Fold hot-table deltas: the frontier snapshot becomes the live
+        view (pops applied) of every frontier row a pop may have
+        touched, url_seen its latest-wins view, visited/content_hashes
         distinct *by construction* (the per-round membership joins rely
         on semi/anti duplicate-insensitivity between compactions, never
         a per-round distinct). The key tables are rewritten in bucket
@@ -1567,9 +1627,20 @@ class CrawlEngine:
         adds before clearing pops keeps any crash point consistent.
         This is the ONLY place a corpus-sized window/aggregate runs —
         amortized over ``compact_every`` rounds, exactly like Iceberg's
-        rewrite_data_files maintenance job. It is also where the visited
-        Bloom filter is created, once ``visited`` reaches
-        ``prune_min_bytes``.
+        rewrite_data_files maintenance job.
+
+        A ``frontier_adds`` delta that no pop since the pops floor can
+        have touched stays in the manifest by reference
+        (:func:`carried_deltas`; bulk loads such as a seed-list
+        import): the snapshot, its histogram and the persisted live
+        view cover only the folded rows. The bucket-clustered
+        ``frontier_index`` exists, like the Bloom filter, only from the
+        compaction that finds its source (``frontier_adds``) at
+        ``prune_min_bytes`` on; below that floor ``_pruned`` never
+        prunes it and it would be a second full copy of the frontier.
+        Once it exists every compaction rebuilds it over the folded and
+        the carried rows. The visited Bloom filter is created here too,
+        once ``visited`` reaches ``prune_min_bytes``.
 
         The snapshot WRITES run concurrently (every rewrite reads the
         pre-compaction manifest and destroys nothing — prepared dirs
@@ -1589,20 +1660,33 @@ class CrawlEngine:
         visited = self._visited_view()
         bloom = self._bloom_latest()
         futs: dict = {}
-        live = self._live_frontier()
-        if live is not None:
-            live = live.persist()
+        rels = self.catalog.rels("frontier_adds")
+        carried = carried_deltas(
+            self.catalog.root, rels, self.catalog.rels_since(
+                "crawl_log", self.catalog.meta.get("pops_floor", -1)))
+        folded = self.catalog.read_rels(
+            "frontier_adds", [r for r in rels if r not in carried])
+        live = None if folded is None else self._minus_pops(folded).persist()
+        index = live is not None and (
+            self.catalog.exists("frontier_index")
+            or (self.catalog.table_bytes("frontier_adds")
+                >= self.cfg.prune_min_bytes))
         try:
             with ThreadPoolExecutor(max_workers=_COMPACT_POOL_WORKERS) as ex:
-                if live is not None:
-                    # bucket-clustered (site, url, counter) projection for
-                    # the link-dedup membership scan (Iceberg
-                    # secondary-index analog)
+                if index:
+                    # bucket-clustered (site, url, counter) projection of
+                    # the whole frontier for the link-dedup membership
+                    # scan (Iceberg secondary-index analog); carried
+                    # deltas hold no popped row, so they need no pops
+                    # anti-join
                     futs["frontier_index"] = ex.submit(
                         self.catalog.prepare_compact, "frontier_index",
                         self._bucket_layout(
-                            live.select("site", "url", "counter", "bucket"),
+                            _union(live, self.catalog.read_rels(
+                                "frontier_adds", carried))
+                            .select("site", "url", "counter", "bucket"),
                             "url"))
+                if live is not None:
                     # pop-layout snapshot: depth/counter-clustered so the
                     # histogram cutoff predicate skips files
                     futs["frontier_adds"] = ex.submit(
@@ -1635,23 +1719,25 @@ class CrawlEngine:
             # the snapshot writes are its only readers
             if live is not None:
                 live.unpersist()
-        if live is not None:
+        if index:
             # index publishes BEFORE the snapshot: a crash between the
             # two leaves the index a SUPERSET of the frontier (extra
             # rows are removed by the pops anti-join), never a subset
             self.catalog.commit_compact("frontier_index",
                                         done["frontier_index"])
+        if live is not None:
             for st in self.sites.values():
                 st.pops_since_compact = 0
             self.catalog.commit_compact(
                 "frontier_adds", done["frontier_adds"],
                 meta={"frontier_hist": done["hist"],
                       # every pop ≤ this round is folded into the
-                      # snapshot above; the floor commits ATOMICALLY
-                      # with it, so the derived pops view can never
-                      # miss a pop at any crash point
+                      # snapshot above (none touches a carried delta);
+                      # the floor commits ATOMICALLY with it, so the
+                      # derived pops view can never miss a pop at any
+                      # crash point
                       "pops_floor": self.catalog.committed_round},
-                state=self._state_dict())
+                state=self._state_dict(), keep=carried)
         # content_hashes publishes BEFORE url_seen_log: its view
         # derives deltas from url_seen's r*-dirs, so the floor must
         # advance while those dirs still exist — after this,
@@ -1748,14 +1834,19 @@ class CrawlEngine:
         # link rediscovering an excluded/denied URL is pushed again.
         # Inverted the same way: one bounded-build-side membership scan
         # (link-keys semi, then pops anti), never a shuffle of the
-        # 10^10-row frontier. The compacted tier is read through the
-        # bucket-clustered ``frontier_index`` projection (committed
-        # before the snapshot it indexes, see _compact), so the scan
-        # file-skips like the seen tables; post-compaction
-        # frontier_adds deltas (bounded by compact_every rounds) ride
-        # along unpruned.
+        # 10^10-row frontier. Once the frontier reached the prune floor
+        # (see _compact), everything up to the pops floor — the folded
+        # and the carried rows — is read through the bucket-clustered
+        # ``frontier_index`` projection (committed before the snapshot
+        # it indexes), so the scan file-skips like the seen tables; the
+        # deltas staged since (bounded by compact_every rounds) ride
+        # along unpruned. Below the floor every frontier_adds tier is
+        # scanned, as the unpruned index would be.
         idx = self.catalog.read("frontier_index")
-        _, adds_deltas = self.catalog.read_split("frontier_adds")
+        adds_deltas = (self.catalog.read("frontier_adds") if idx is None
+                       else self.catalog.read_since(
+                           "frontier_adds",
+                           self.catalog.meta.get("pops_floor", -1)))
         if idx is not None or adds_deltas is not None:
             links = self._persist_tmp(links)
             if n_links is None:
@@ -1792,20 +1883,27 @@ class CrawlEngine:
         driver-side array, only when a cap is configured. Returns the
         ``new_links`` rows of the allowed pages."""
         cap = self.cfg.max_queue_size
-        live = self._live_frontier()
-        # three independent tiny rollups — overlap their job overhead
-        # on the engine pool
+        # the live frontier's per-site size at round start: the tracked
+        # frontier_rows (exact — the same rollup as the pops); only
+        # untracked sites pay a count over the live frontier
+        live_n = {s: st.frontier_rows for s, st in self.sites.items()
+                  if st.frontier_rows is not None}
+        untracked = [s for s in self.sites if s not in live_n]
+        live = self._live_frontier() if untracked else None
+        # independent tiny rollups — overlap their job overhead on the
+        # engine pool
         fut_pop = self._submit(
             popped.groupBy("site").agg(F.count("*").alias("n")).collect)
         fut_live = (self._submit(
-            live.groupBy("site").agg(F.count("*").alias("n")).collect)
+            live.filter(F.col("site").isin(untracked))
+            .groupBy("site").agg(F.count("*").alias("n")).collect)
             if live is not None else None)
         fut_pp = self._submit(
             new_links.groupBy("site", "pos_in_round")
             .agg(F.count("*").alias("n")).collect)
         popped_n = {r["site"]: r["n"] for r in fut_pop.result()}
-        live_n = ({r["site"]: r["n"] for r in fut_live.result()}
-                  if fut_live is not None else {})
+        if fut_live is not None:
+            live_n.update((r["site"], r["n"]) for r in fut_live.result())
         per_page = fut_pp.result()
         by_site: dict[str, list] = {}
         for r in sorted(per_page, key=lambda r: (r["site"], r["pos_in_round"])):

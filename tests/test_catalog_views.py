@@ -225,3 +225,77 @@ class TestFooterSchema:
             inferred = spark.read.parquet(*df.inputFiles())
             assert ([(f.name, f.dataType) for f in df.schema]
                     == [(f.name, f.dataType) for f in inferred.schema])
+
+
+class TestCarriedCompaction:
+    """A compaction may keep some delta dirs by reference: the frontier
+    deltas no pop can have touched (``carried_deltas``, decided from
+    parquet footers) stay in the manifest beside the new snapshot."""
+
+    _ADDS = pa.schema([("site", pa.string()), ("counter", pa.int64())])
+
+    def _write(self, root, rel, counters, row_group_size=None):
+        import os
+
+        import pyarrow.parquet as pq
+
+        os.makedirs(os.path.join(root, rel), exist_ok=True)
+        pq.write_table(
+            pa.Table.from_pylist([{"site": "s", "counter": c}
+                                  for c in counters], schema=self._ADDS),
+            os.path.join(root, rel, "part-00000.parquet"),
+            row_group_size=row_group_size)
+        return rel
+
+    def test_carry_rule_from_footers(self, tmp_path):
+        from meilisearchcrawler_spark.engine.crawler import carried_deltas
+
+        root = str(tmp_path)
+        pops = [self._write(root, "crawl_log/r000003_a", [10, 40]),
+                self._write(root, "crawl_log/r000004_a", [45, 50])]
+        snap = self._write(root, "frontier_adds/compact_a",
+                           range(100_000, 103_000))
+        # disjoint from both pop ranges [10, 40] and [45, 50]
+        bulk = self._write(root, "frontier_adds/r000000_a",
+                           range(1000, 21000))
+        # two row groups: [41, 44] misses every pop range, [46, 49]
+        # meets [45, 50]
+        touched = self._write(root, "frontier_adds/r000003_a",
+                              [41, 44, 46, 49], row_group_size=2)
+        empty = self._write(root, "frontier_adds/r000004_a", [])
+        rels = [snap, bulk, touched, empty]
+        assert carried_deltas(root, rels, pops) == [bulk]
+
+        # two untouched deltas: the smaller one weighs less than the
+        # rest of the fold once the larger is carried, so it folds
+        small = self._write(root, "frontier_adds/r000001_a",
+                            range(7000, 7400))
+        assert carried_deltas(root, [snap, bulk, small, touched],
+                              pops) == [bulk]
+
+    def test_commit_keeps_carried_dirs_without_a_job(self, spark,
+                                                     tmp_path):
+        import os
+
+        cat = CheckpointCatalog(spark, str(tmp_path / "cat"))
+        rels = [cat.stage_rows("frontier_adds", [{"site": "s",
+                                                  "counter": r}],
+                               self._ADDS, r) for r in range(3)]
+        cat.commit_round(2, {"frontier_adds": rels}, {})
+        rel = cat.prepare_compact("frontier_adds",
+                                  cat.read_rels("frontier_adds", rels[:2]))
+        tracker = spark.sparkContext.statusTracker()
+        before = set(tracker.getJobIdsForGroup(None))
+        cat.commit_compact("frontier_adds", rel, meta={"pops_floor": 2},
+                           keep=[rels[2]])
+        assert set(tracker.getJobIdsForGroup(None)) == before
+        assert cat.rels("frontier_adds") == [rel, rels[2]]
+        assert cat.read_split("frontier_adds")[1].count() == 1
+        assert os.path.isdir(os.path.join(cat.root, rels[2]))
+        for old in rels[:2]:
+            assert not os.path.exists(os.path.join(cat.root, old))
+        # the kept dir was staged at round 2, at the new floor: a
+        # floor-pruned read no longer lists it
+        assert cat.rels_since("frontier_adds", 2) == []
+        assert sorted(r["counter"] for r in
+                      cat.read("frontier_adds").collect()) == [0, 1, 2]

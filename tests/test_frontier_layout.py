@@ -110,6 +110,44 @@ class TestPopCutoff:
         assert pop_cutoff(None, {"a": 1}) is None
         assert pop_cutoff({}, {"a": 1}) is None
 
+    def test_cut_on_deltas_keeps_live_top_randomized(self):
+        """The cut applied to every tier: with delta rows added for
+        covered sites and up to ``pops`` snapshot rows popped, the
+        rows it keeps (an uncovered site keeps all of its delta rows)
+        still hold each site's top-``prefix_k`` of the live union."""
+        rng = random.Random(23)
+        for trial in range(40):
+            snap, deltas, pops = [], [], {}
+            counter = 0
+            for s in range(rng.randint(1, 3)):
+                for _ in range(rng.randint(1, 300)):
+                    counter += rng.randint(1, 3)
+                    snap.append((f"s{s}", rng.randint(0, 4), counter))
+            covered = sorted({r[0] for r in snap})
+            for site in covered + ["fresh"]:
+                for _ in range(rng.randint(0, 200)):
+                    counter += rng.randint(1, 3)
+                    deltas.append((site, rng.randint(0, 5), counter))
+            hist = _hist_of(snap)
+            live_snap = list(snap)
+            for site in covered:
+                mine = [r for r in live_snap if r[0] == site]
+                pops[site] = rng.randint(0, len(mine))
+                for r in rng.sample(mine, pops[site]):
+                    live_snap.remove(r)
+            prefix_k = rng.randint(1, 120)
+            needs = {site: prefix_k + pops.get(site, 0)
+                     for site in covered + ["fresh"]}
+            cut = pop_cutoff(hist, needs)
+            live = live_snap + deltas
+            kept = set(_kept(live_snap, cut))
+            kept |= {r for r in deltas
+                     if r in set(_kept(deltas, cut)) or r[0] not in hist}
+            for site in needs:
+                for row in _top_need(live, site, prefix_k):
+                    assert row in kept, (trial, cut, site, row)
+            assert {r for r in deltas if r[0] == "fresh"} <= kept
+
 
 class TestFrontierHistSpark:
     def test_matches_reference_builder(self, spark):
@@ -152,3 +190,127 @@ class TestEnginePrunedPopView:
         got = sorted(tuple(r) for r in candidate_prefix(pruned, prefix_k)
                      .select("site", "url", "depth", "counter").collect())
         assert got == want
+
+
+def _inject_filler(spark, eng, rows: int) -> str:
+    """Commit ``rows`` frontier rows below every fetchable row in heap
+    order (depth 0, counters from 10^9) as one out-of-band delta, the
+    way a bulk load lands; returns its rel."""
+    from pyspark.sql import functions as F
+
+    from meilisearchcrawler_spark.engine.crawler import bucket_col
+
+    sites = sorted(eng.sites)
+    filler = (spark.range(rows)
+              .select(F.element_at(F.array(*map(F.lit, sites)),
+                                   (F.col("id") % len(sites) + 1).cast("int"))
+                      .alias("site"),
+                      F.concat(F.lit("http://filler.invalid/p"), F.col("id"))
+                      .alias("url"),
+                      F.lit("filler.invalid").alias("host"),
+                      F.lit(0).cast("int").alias("depth"),
+                      (F.col("id") + 1_000_000_000).alias("counter"))
+              .withColumn("bucket", bucket_col(F.col("url"),
+                                               eng.cfg.seen_buckets)))
+    rel = eng.catalog.stage("frontier_adds", filler, 0, max_files=0)
+    eng.catalog.commit_round(eng.catalog.committed_round,
+                             {"frontier_adds": [rel]}, eng.catalog.state)
+    for st in eng.sites.values():
+        st.frontier_rows = None  # out-of-band rows: sizes unknown
+    return rel
+
+
+def test_compaction_carries_untouched_bulk_delta(spark, tmp_path):
+    """A bulk delta no pop reaches survives compaction by reference:
+    the snapshot that compaction writes has the same bytes whatever the
+    bulk size, no ``frontier_index`` exists below the prune floor, the
+    histogram cut file-skips the bulk rows out of selection without
+    changing the candidate prefix, and the crawl stays
+    reference-identical across a resume. Once pops reach the bulk rows,
+    the next compaction folds them and applies those pops."""
+    import os
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from meilisearchcrawler_spark.config import CrawlConfig
+    from meilisearchcrawler_spark.engine.crawler import CrawlEngine
+    from meilisearchcrawler_spark.fixtures.webgen import (
+        generate_web, write_parquet)
+    from meilisearchcrawler_spark.oracle.refcrawler import crawl_site
+    from meilisearchcrawler_spark.session import ship_package
+
+    ship_package(spark)
+    # frontier-steady's fan-out, so that after two compactions each
+    # site's snapshot holds more than its candidate prefix and the
+    # histogram cut exists
+    budget = 4
+    fx = generate_web(seed=19, n_sites=2, pages_per_site=200,
+                      fanout=(14, 24))
+    paths = write_parquet(fx, str(tmp_path / "web"))
+    cfg = CrawlConfig(round_budget=budget, shuffle_partitions=4,
+                      compact_every=2)
+
+    def engine(root, cfg=cfg):
+        return CrawlEngine(spark, root, paths["pages"], fx.seeds,
+                           fx.robots, cfg, initial_url_seen=fx.url_seen)
+
+    base = str(tmp_path / "base")
+    engine(base).run(max_rounds=2)  # compacts after round 2
+
+    snapshot_bytes, fillers = {}, {}
+    for rows in (20_000, 60_000):
+        root = str(tmp_path / f"cat{rows}")
+        shutil.copytree(base, root)
+        eng = engine(root)
+        fillers[rows] = _inject_filler(spark, eng, rows)
+        eng.run(max_rounds=2)  # compacts after round 4
+        adds = eng.catalog.rels("frontier_adds")
+        assert fillers[rows] in adds
+        (snap,) = [r for r in adds if "compact_" in r]
+        snapshot_bytes[rows] = sum(
+            os.path.getsize(os.path.join(root, snap, f))
+            for f in os.listdir(os.path.join(root, snap))
+            if f.endswith(".parquet"))
+        assert not eng.catalog.exists("frontier_index")
+
+        budgets = {s: budget for s in eng.sites}
+        prefix_k = budget * 8 + 64
+        pruned = eng._pop_frontier(budgets, prefix_k)
+        assert pruned.filter(F.col("host") == "filler.invalid").count() == 0
+        full = eng._live_frontier()
+        want = sorted(map(tuple, candidate_prefix(full, prefix_k)
+                          .select("site", "url", "counter").collect()))
+        got = sorted(map(tuple, candidate_prefix(pruned, prefix_k)
+                         .select("site", "url", "counter").collect()))
+        assert got == want
+    assert snapshot_bytes[20_000] == snapshot_bytes[60_000]
+
+    # a fresh engine resumed on the carrying catalog crawls on exactly
+    # as the reference does
+    eng = engine(str(tmp_path / "cat60000"))
+    eng.run(max_rounds=1)
+    log = eng.catalog.read("crawl_log").filter(F.col("action") == "admitted")
+    for site in fx.seeds:
+        want = [(r["round"], r["pos_in_round"], r["url"], r["counter"])
+                for r in crawl_site(fx, site, batch_size=budget,
+                                    max_rounds=5).crawl_log
+                if r["action"] == "admitted"]
+        got = sorted((r["round"], r["pos_in_round"], r["url"], r["counter"])
+                     for r in log.filter(F.col("site") == site["site"])
+                     .collect())
+        assert got == want, site["site"]
+
+    # a budget past the real frontier pops filler rows in one round,
+    # and the compaction after it folds them
+    eng = engine(str(tmp_path / "cat20000"),
+                 CrawlConfig(round_budget=1000, shuffle_partitions=4,
+                             compact_every=1))
+    eng.run_round()
+    assert (eng.catalog.read("crawl_log")
+            .filter(F.col("url").startswith("http://filler.invalid/"))
+            .count())
+    assert fillers[20_000] not in eng.catalog.rels("frontier_adds")
+    live = eng._live_frontier().select("site", "counter")
+    popped = eng.catalog.read("crawl_log").select("site", "counter")
+    assert live.join(popped, ["site", "counter"]).count() == 0
