@@ -78,7 +78,7 @@ class CheckpointCatalog:
         # still scans the files.
         self._handles: dict[tuple[str, tuple[str, ...]], DataFrame] = {}
 
-    def read_rels(self, table: str, rels) -> DataFrame | None:
+    def _read_paths(self, table: str, rels) -> DataFrame | None:
         """A lazy read over ``rels`` (None when there are none). The
         schema comes from the footer of the file Spark's own inference
         would open (the first path in sorted order; ``mergeSchema`` is
@@ -169,8 +169,12 @@ class CheckpointCatalog:
     def exists(self, table: str) -> bool:
         return bool(self.rels(table))
 
-    def read(self, table: str) -> DataFrame | None:
-        return self.read_rels(table, self.rels(table))
+    def read(self, table: str, rels: list[str] | None = None
+             ) -> DataFrame | None:
+        """A lazy read over ``table``'s committed dirs, or over ``rels``
+        (some of them) when given; None when there are none."""
+        return self._read_paths(table,
+                                self.rels(table) if rels is None else rels)
 
     def read_split(self, table: str) -> tuple[DataFrame | None, DataFrame | None]:
         """``(compacted snapshot, deltas)`` — readers that apply
@@ -182,7 +186,7 @@ class CheckpointCatalog:
         rels = self.rels(table)
         comp = _compacted(rels)
         rest = [r for r in rels if r not in comp]
-        return self.read_rels(table, comp), self.read_rels(table, rest)
+        return self._read_paths(table, comp), self._read_paths(table, rest)
 
     def rels_since(self, table: str, floor_round: int) -> list[str]:
         """The delta dirs of ``table`` staged for rounds AFTER
@@ -199,7 +203,7 @@ class CheckpointCatalog:
 
     def read_since(self, table: str, floor_round: int) -> DataFrame | None:
         """A read over :meth:`rels_since`."""
-        return self.read_rels(table, self.rels_since(table, floor_round))
+        return self._read_paths(table, self.rels_since(table, floor_round))
 
     @property
     def meta(self) -> dict:

@@ -1631,16 +1631,20 @@ class CrawlEngine:
 
         A ``frontier_adds`` delta that no pop since the pops floor can
         have touched stays in the manifest by reference
-        (:func:`carried_deltas`; bulk loads such as a seed-list
-        import): the snapshot, its histogram and the persisted live
-        view cover only the folded rows. The bucket-clustered
-        ``frontier_index`` exists, like the Bloom filter, only from the
-        compaction that finds its source (``frontier_adds``) at
-        ``prune_min_bytes`` on; below that floor ``_pruned`` never
-        prunes it and it would be a second full copy of the frontier.
-        Once it exists every compaction rebuilds it over the folded and
-        the carried rows. The visited Bloom filter is created here too,
-        once ``visited`` reaches ``prune_min_bytes``.
+        (:func:`carried_deltas`): the snapshot, its histogram and the
+        persisted live view cover only the folded rows. Such a delta is
+        a bulk load committed beside the crawl below every row it pops
+        (perfbench's frontier filler); a frontier the crawl grows by
+        itself folds whole (its deltas' counters overlap the pops'). The
+        bucket-clustered ``frontier_index`` exists, like the Bloom
+        filter, only from the compaction that finds its source
+        (``frontier_adds``) at ``prune_min_bytes`` on; below that floor
+        scanning the frontier itself is as cheap, and the index would
+        be a second full copy of it. Once it exists every compaction
+        rebuilds it over the folded and the carried rows, and records
+        the carried dirs as the ones it covers. The visited Bloom
+        filter is created here too, once ``visited`` reaches
+        ``prune_min_bytes``.
 
         The snapshot WRITES run concurrently (every rewrite reads the
         pre-compaction manifest and destroys nothing — prepared dirs
@@ -1664,7 +1668,7 @@ class CrawlEngine:
         carried = carried_deltas(
             self.catalog.root, rels, self.catalog.rels_since(
                 "crawl_log", self.catalog.meta.get("pops_floor", -1)))
-        folded = self.catalog.read_rels(
+        folded = self.catalog.read(
             "frontier_adds", [r for r in rels if r not in carried])
         live = None if folded is None else self._minus_pops(folded).persist()
         index = live is not None and (
@@ -1682,7 +1686,7 @@ class CrawlEngine:
                     futs["frontier_index"] = ex.submit(
                         self.catalog.prepare_compact, "frontier_index",
                         self._bucket_layout(
-                            _union(live, self.catalog.read_rels(
+                            _union(live, self.catalog.read(
                                 "frontier_adds", carried))
                             .select("site", "url", "counter", "bucket"),
                             "url"))
@@ -1736,7 +1740,11 @@ class CrawlEngine:
                       # the floor commits ATOMICALLY with it, so the
                       # derived pops view can never miss a pop at any
                       # crash point
-                      "pops_floor": self.catalog.committed_round},
+                      "pops_floor": self.catalog.committed_round,
+                      # the dirs besides the snapshot that the index
+                      # covers: every other delta is link-deduped
+                      # against directly, whatever round it names
+                      "frontier_indexed": carried if index else []},
                 state=self._state_dict(), keep=carried)
         # content_hashes publishes BEFORE url_seen_log: its view
         # derives deltas from url_seen's r*-dirs, so the floor must
@@ -1835,18 +1843,22 @@ class CrawlEngine:
         # Inverted the same way: one bounded-build-side membership scan
         # (link-keys semi, then pops anti), never a shuffle of the
         # 10^10-row frontier. Once the frontier reached the prune floor
-        # (see _compact), everything up to the pops floor — the folded
-        # and the carried rows — is read through the bucket-clustered
+        # (see _compact), the rows the last compaction covered — the
+        # snapshot and the deltas it carried, as its commit records
+        # them — are read through the bucket-clustered
         # ``frontier_index`` projection (committed before the snapshot
-        # it indexes), so the scan file-skips like the seen tables; the
-        # deltas staged since (bounded by compact_every rounds) ride
-        # along unpruned. Below the floor every frontier_adds tier is
-        # scanned, as the unpruned index would be.
+        # it indexes), bucket-pruned like the seen tables; every other
+        # delta (staged since, bounded by compact_every rounds, or
+        # loaded out of band) rides along unpruned. Below the floor
+        # every frontier_adds tier is scanned, as the unpruned index
+        # would be.
         idx = self.catalog.read("frontier_index")
-        adds_deltas = (self.catalog.read("frontier_adds") if idx is None
-                       else self.catalog.read_since(
-                           "frontier_adds",
-                           self.catalog.meta.get("pops_floor", -1)))
+        rels = self.catalog.rels("frontier_adds")
+        if idx is not None:
+            covered = set(_compacted(rels)).union(
+                self.catalog.meta.get("frontier_indexed", []))
+            rels = [r for r in rels if r not in covered]
+        adds_deltas = self.catalog.read("frontier_adds", rels)
         if idx is not None or adds_deltas is not None:
             links = self._persist_tmp(links)
             if n_links is None:
@@ -1860,8 +1872,9 @@ class CrawlEngine:
             link_keys = links.select(
                 "site", F.col("link_url").alias("url")).distinct()
             if idx is not None:
-                idx = self._pruned("frontier_index", idx, link_keys, "url",
-                                   bucket_list=all_buckets)
+                # the index exists only from the prune floor on, and the
+                # bucket set is already collected: prune it outright
+                idx = idx.filter(F.col("bucket").isin(all_buckets))
             cand = _union(*(p.select("site", "url", "counter")
                             for p in (idx, adds_deltas) if p is not None))
             still_queued = (

@@ -283,7 +283,7 @@ class TestCarriedCompaction:
                                self._ADDS, r) for r in range(3)]
         cat.commit_round(2, {"frontier_adds": rels}, {})
         rel = cat.prepare_compact("frontier_adds",
-                                  cat.read_rels("frontier_adds", rels[:2]))
+                                  cat.read("frontier_adds", rels[:2]))
         tracker = spark.sparkContext.statusTracker()
         before = set(tracker.getJobIdsForGroup(None))
         cat.commit_compact("frontier_adds", rel, meta={"pops_floor": 2},

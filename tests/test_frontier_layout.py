@@ -314,3 +314,38 @@ def test_compaction_carries_untouched_bulk_delta(spark, tmp_path):
     live = eng._live_frontier().select("site", "counter")
     popped = eng.catalog.read("crawl_log").select("site", "counter")
     assert live.join(popped, ["site", "counter"]).count() == 0
+
+
+def test_link_dedup_reads_deltas_the_index_does_not_cover(spark, tmp_path):
+    """A delta committed after ``frontier_index`` was built, under a
+    round at or below the pops floor (a bulk load staged at round 0),
+    is not in the index: link dedup must still find its URLs, so a link
+    to one of them is not pushed a second time."""
+    from meilisearchcrawler_spark.config import CrawlConfig
+    from meilisearchcrawler_spark.engine.crawler import CrawlEngine
+    from meilisearchcrawler_spark.fixtures.webgen import (
+        generate_web, write_parquet)
+    from meilisearchcrawler_spark.session import ship_package
+
+    ship_package(spark)
+    fx = generate_web(seed=19, n_sites=2, pages_per_site=24)
+    paths = write_parquet(fx, str(tmp_path / "web"))
+    eng = CrawlEngine(spark, str(tmp_path / "cat"), paths["pages"],
+                      fx.seeds, fx.robots,
+                      CrawlConfig(round_budget=4, shuffle_partitions=4,
+                                  compact_every=1, prune_min_bytes=0),
+                      initial_url_seen=fx.url_seen)
+    eng.run(max_rounds=1)  # compacts after round 1 and builds the index
+    assert eng.catalog.exists("frontier_index")
+    _inject_filler(spark, eng, 3)  # p0 and p2 land in the first site
+    site = sorted(eng.sites)[0]
+    links = spark.createDataFrame(
+        [(site, 0, 1, 0, "http://filler.invalid/p0"),
+         (site, 0, 1, 1, "http://filler.invalid/new")],
+        "site string, pos_in_round int, link_depth int, link_pos int, "
+        "link_url string")
+    popped = spark.createDataFrame(
+        [], "site string, url string, counter long, admissible boolean, "
+        "f_ext boolean, f_visited boolean, f_excluded boolean")
+    kept = [r["link_url"] for r in eng._dedup_links(links, popped).collect()]
+    assert kept == ["http://filler.invalid/new"]
